@@ -607,7 +607,7 @@ def main() -> None:
     # 10x growth factors, not just absolute times at one scale
     scale_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "SCALE.json")
-    worst_growth = n_superlinear = None
+    n_superlinear = None
     if os.path.exists(scale_path):
         with open(scale_path) as f:
             art = json.load(f)
@@ -616,25 +616,29 @@ def main() -> None:
             "worst_growth_10x": art.get("worst_growth_10x"),
             "superlinear_keys": art.get("superlinear_keys"),
         }
-        worst_growth = art.get("worst_growth_10x")
         n_superlinear = len(art.get("superlinear_keys") or [])
     # Verbose artifact first (humans / local tooling) …
     print(json.dumps(out))
-    # … then a truncation-proof COMPACT line LAST: the driver records
-    # only a 2,000-char tail of stdout, so this line alone must carry
-    # the full suite — 2-decimal times, compact separators, scalar
-    # scale summary instead of the nested per-key probe map.
-    # RECORDED_KEYS subset, 1-decimal (fixed membership, zero churn —
-    # see the RECORDED_KEYS note; full 3-decimal map is in the
-    # verbose line above). The prefix strip is unconditional now (it
-    # was fallback 1 since round 14; the driver's per-key diff
-    # already tracks the stripped names).
+    # … then the truncation-proof compact line LAST
+    print(compact_line(out, timings, sf1, n_superlinear))
+
+
+def compact_line(out: dict, timings: dict, sf1, n_superlinear) -> str:
+    """The truncation-proof COMPACT line: only a 2,000-char tail of
+    stdout is recorded, so this line alone must carry the full
+    suite — compact separators, scalar scale summary instead of the
+    nested per-key probe map. RECORDED_KEYS subset, 1-decimal (fixed
+    membership, zero churn — see the RECORDED_KEYS note; full
+    3-decimal map is in the verbose line). The prefix strip is
+    unconditional (per-key diffs track the stripped names). Keys outside ``queries`` are summed into rest_n/rest_sec,
+    so value == sum(queries) + rest_sec up to the 1-decimal
+    rounding."""
     rec = {k: round(v, 1) for k, v in timings.items()
            if k in set(RECORDED_KEYS)}
     rest = [v for k, v in timings.items() if k not in set(RECORDED_KEYS)]
     compact = {
         "metric": out["metric"],
-        "value": total,
+        "value": out["value"],
         "unit": "sec",
         "sf": out["sf"],
         "queries": {k.removeprefix("q_"): v for k, v in rec.items()},
@@ -651,16 +655,19 @@ def main() -> None:
     if n_superlinear is not None:
         compact["n_superlinear"] = n_superlinear
     line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > 1900 and compact["queries"]:
-        # fallback 2 (loud, never silent truncation): drop the
-        # FASTEST entries until the line fits — the gate-relevant
+    while len(line) > 1900 and rec:
+        # fallback (loud, never silent truncation): move the FASTEST
+        # entries into rest until the line fits — the gate-relevant
         # worst keys and the suite total always survive intact.
-        drop = min(compact["queries"], key=compact["queries"].get)
-        compact["queries"].pop(drop)
-        compact["n_omitted_fastest"] = compact.get(
-            "n_omitted_fastest", 0) + 1
+        drop = min(rec, key=rec.get)
+        compact["queries"].pop(drop.removeprefix("q_"))
+        rest.append(timings[drop])
+        del rec[drop]
+        compact.update(rest_n=len(rest), rest_sec=round(sum(rest), 1),
+                       n_omitted_fastest=compact.get(
+                           "n_omitted_fastest", 0) + 1)
         line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    return line
 
 
 if __name__ == "__main__":

@@ -1,9 +1,36 @@
-"""Table loading, view registration, and sinks.
+"""Table loading, view registration, the session memo, and sinks.
 
 ``load_tables`` reads the ten driver parquet tables, repairs
 ``events.ts`` (TIMESTAMP(NANOS) → microsecond timestamp, SURVEY.md
 §1.4), registers temp views, and memoizes per (session, sf_dir) so
 the ~70 query callables don't re-read parquet footers.
+
+``memo(spark, sf, key, build)`` is the one store for everything an
+operator derives once and reuses within a session: fitted
+codebooks and merges, persisted side frames, memory-sink stream
+tables, staged artifact dirs. ``key`` is a string or a tuple whose
+head names the artifact (``"bpe_merges"``, ``("stream", kind)``).
+Its lifecycle:
+
+- The store lives ON the session object (see ``session_cache``), so
+  it dies with the session and a ``newSession()`` sibling starts
+  empty.
+- Entries are grouped by sf dir (trailing ``/`` stripped). A session
+  keeps at most ``MEMO_KEEP_SF`` groups; touching a new sf dir
+  evicts the least recently used group, and eviction unpersists
+  every frame in it, bare or inside a tuple or list. A session
+  cycling many sf dirs therefore holds a bounded persisted
+  footprint instead of leaving it to the memory store's own
+  eviction.
+- Entries with ``sf=None`` are session-wide (data-source
+  registration, the bloom sibling session) and are never evicted.
+- ``build`` runs on a miss only; if it raises, nothing is stored.
+- ``memo_drop`` removes entries explicitly (tests that need a cold
+  rebuild, the cold-run probe).
+
+Two kinds of session state follow other policies and stay outside
+the memo: ``load_tables``' frames and view pointer (kept for the
+session's life), and ``plan_persist``'s one generation per key.
 """
 from __future__ import annotations
 
@@ -34,22 +61,43 @@ def session_cache(spark: SparkSession, name: str) -> dict:
     return d
 
 
-def evict_persisted_lru(cache: dict, keep: int = 3) -> None:
-    """Eviction hook for session caches that hold PERSISTED frames
-    (round-11 ADVICE): when a cache is about to grow past ``keep``
-    entries, unpersist and drop the oldest ones (dict insertion order
-    is the LRU order — entries are only ever inserted, never
-    re-inserted). Without this, a long-lived session cycling many
-    sf dirs accumulates persisted partitions in executor storage
-    until the memory-store evicts them unpredictably; with it, the
-    bound is explicit. Values may be a DataFrame or any tuple/list
-    containing DataFrames."""
-    while len(cache) >= max(1, keep):
-        v = cache.pop(next(iter(cache)))
-        stack = list(v) if isinstance(v, (tuple, list)) else [v]
-        for item in stack:
-            if hasattr(item, "unpersist"):
-                item.unpersist()
+MEMO_KEEP_SF = 3
+
+
+def _unpersist(value) -> None:
+    items = value if isinstance(value, (tuple, list)) else [value]
+    for item in items:
+        if hasattr(item, "unpersist"):
+            item.unpersist()
+
+
+def memo(spark: SparkSession, sf: str | None, key, build):
+    """The session's value for ``(sf, key)``, calling ``build()`` on a
+    miss (lifecycle in the module docstring)."""
+    store = session_cache(spark, "_engine_memo")
+    group_key = None if sf is None else sf.rstrip("/")
+    group = store.pop(group_key, None)
+    if group is None:
+        group = {}
+        live = [g for g in store if g is not None]
+        if group_key is not None and len(live) >= MEMO_KEEP_SF:
+            for v in store.pop(live[0]).values():  # least recently used
+                _unpersist(v)
+    store[group_key] = group  # (re)insert = most recently used
+    if key not in group:
+        group[key] = build()
+    return group[key]
+
+
+def memo_drop(spark: SparkSession, *prefix) -> None:
+    """Drop the memo entries (of every sf) whose key starts with
+    ``prefix`` — a string key counts as a 1-tuple — unpersisting the
+    frames they hold. No prefix clears the whole store."""
+    n = len(prefix)
+    for group in session_cache(spark, "_engine_memo").values():
+        for k in list(group):
+            if (k if isinstance(k, tuple) else (k,))[:n] == prefix:
+                _unpersist(group.pop(k))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -158,12 +206,8 @@ def table_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     """Memoized row count of a driver table — used by operators that
     size themselves from n (ANN chunk counts, IVF nlist) so repeated
     invocations don't re-run the count job."""
-    sf = sf_dir.rstrip("/")
-    per_session = session_cache(spark, "_engine_count_cache")
-    key = (sf, table)
-    if key not in per_session:
-        per_session[key] = load_tables(spark, sf)[table].count()
-    return per_session[key]
+    return memo(spark, sf_dir, ("count", table),
+                lambda: load_tables(spark, sf_dir)[table].count())
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",

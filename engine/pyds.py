@@ -52,9 +52,7 @@ class SeriesSource(DataSource):
 
 def register(spark) -> None:
     """Idempotent per-session registration."""
-    from .io import session_cache
+    from .io import memo
 
-    cache = session_cache(spark, "_engine_pyds")
-    if "registered" not in cache:
-        spark.dataSource.register(SeriesSource)
-        cache["registered"] = True
+    memo(spark, None, "pyds",
+         lambda: spark.dataSource.register(SeriesSource))

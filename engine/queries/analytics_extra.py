@@ -6,7 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import Window as W, functions as F
 
-from ..io import load_tables, plan_persist, plan_persist_at_scale, spread
+from ..io import (load_tables, memo, plan_persist, plan_persist_at_scale,
+                  spread)
 from ..registry import query
 from .util import (dsum, hexpoly_col, hexpoly_sql, prod128, rnd,
                    sql_dsum, sql_rnd, sum128)
@@ -263,16 +264,12 @@ def q_quantile_bins(spark, sf):
     map-side combine — measured 6.5 s vs 16 s exact-builtin at 60M
     rows). Only the fit differs; the literal-array assignment plan is
     byte-identical (pinned in tests/test_plans_r5.py). The fit is
-    memoized per (session, sf, mode), mirroring the stats caches of
-    q_feature_scale."""
-    from ..io import session_cache
-
+    memoized per mode."""
     li = load_tables(spark, sf)["lineitem"]
     approx = (str(spark.conf.get(
         "spark.engine.quantileBins.approx", "false")).lower() == "true")
-    cache = session_cache(spark, "_engine_qbins_cache")
-    ckey = (sf.rstrip("/"), approx)
-    if ckey not in cache:
+
+    def build():
         if approx:
             ps = ", ".join(str(p) for p in _DECILES)
             raw = li.agg(F.expr(
@@ -281,8 +278,10 @@ def q_quantile_bins(spark, sf):
         else:
             raw = _exact_quantiles_distributed(
                 li, "l_extendedprice", _DECILES)
-        cache[ckey] = _guard_quantize(raw)
-    bs = F.array(*[F.lit(b) for b in cache[ckey]])
+        return _guard_quantize(raw)
+
+    bs = F.array(*[F.lit(b) for b in
+                   memo(spark, sf, ("qbins", approx), build)])
     x = F.col("l_extendedprice")
     return (
         li.select(

@@ -18,7 +18,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from ..io import load_tables, session_cache
+from ..io import load_tables, memo
 from ..registry import query
 from .util import dsum, sql_dsum
 
@@ -26,32 +26,28 @@ from .util import dsum, sql_dsum
 def prepare_bucketed(spark, sf: str, buckets: int = 8) -> str:
     """Write lineitem + orders bucketed by the join key (idempotent
     per session+sf; the tables live in the session catalog, so the
-    memo is session-attached — see engine.io.session_cache).
-    Returns the table-name suffix used."""
-    per_session = session_cache(spark, "_engine_bucket_cache")
-    # normalized cache key ('dir' and 'dir/' must hit the same memo,
-    # like every other per-sf cache in the engine)
-    full = os.path.abspath(sf.rstrip("/"))
-    if full in per_session:
-        return per_session[full]
-    # Tag carries a digest of the FULL path: two sf dirs with the same
-    # basename must not share table names, or the second prepare would
-    # silently repoint the first's cached tag at wrong-scale data.
-    digest = hashlib.md5(full.encode()).hexdigest()[:8]
-    tag = f'{os.path.basename(full).replace(".", "_")}_{digest}'
-    wh = tempfile.mkdtemp(prefix=f"engine_buckets_{tag}_")
-    t = load_tables(spark, sf)
-    for name, df, k in (
-        ("lineitem", t["lineitem"], "l_orderkey"),
-        ("orders", t["orders"], "o_orderkey"),
-    ):
-        tbl = f"bkt_{tag}_{name}"
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (df.write.bucketBy(buckets, k).sortBy(k)
-           .option("path", f"{wh}/{tbl}")
-           .mode("overwrite").saveAsTable(tbl))
-    per_session[full] = tag
-    return tag
+    memo does too). Returns the table-name suffix used."""
+    def build():
+        full = os.path.abspath(sf.rstrip("/"))
+        # Tag carries a digest of the FULL path: two sf dirs with the same
+        # basename must not share table names, or the second prepare would
+        # silently repoint the first's cached tag at wrong-scale data.
+        digest = hashlib.md5(full.encode()).hexdigest()[:8]
+        tag = f'{os.path.basename(full).replace(".", "_")}_{digest}'
+        wh = tempfile.mkdtemp(prefix=f"engine_buckets_{tag}_")
+        t = load_tables(spark, sf)
+        for name, df, k in (
+            ("lineitem", t["lineitem"], "l_orderkey"),
+            ("orders", t["orders"], "o_orderkey"),
+        ):
+            tbl = f"bkt_{tag}_{name}"
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            (df.write.bucketBy(buckets, k).sortBy(k)
+               .option("path", f"{wh}/{tbl}")
+               .mode("overwrite").saveAsTable(tbl))
+        return tag
+
+    return memo(spark, sf, "bucketed", build)
 
 
 @query("q_join_bucketed", oracle=f"""

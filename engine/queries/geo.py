@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, Window as W, functions as F
 
-from ..io import load_tables, session_cache
+from ..io import load_tables, memo
 from ..registry import query
 from .util import hex32_sql, hexpoly_col, rnd, sql_rnd
 
@@ -50,7 +50,7 @@ def _coord_sql(salt: str, key: str, span_mdeg: int, lo: float) -> str:
 
 
 def _customer_points(spark, sf):
-    """Synthesized point table, cached once per (session, sf).
+    """Synthesized point table, cached once.
 
     The md5-derived coordinates stand in for STORED columns (real
     point data carries lat/lon on disk); caching the synthesized
@@ -59,35 +59,27 @@ def _customer_points(spark, sf):
     every downstream consumer (measured: the kNN array lambda
     re-evaluated it per site element, 1000x per point, 30 s vs
     0.5 s at sf0.1)."""
-    cache = session_cache(spark, "_engine_geo_cache")
-    key = (sf.rstrip("/"), "cust")
-    if key not in cache:
-        c = load_tables(spark, sf)["customer"]
-        cache[key] = c.select(
-            "c_custkey", "c_acctbal",
-            _coord("glat", F.col("c_custkey"), 1_200_000, -60.0)
-            .alias("lat"),
-            _coord("glon", F.col("c_custkey"), 3_600_000, -180.0)
-            .alias("lon"),
-        ).cache()
-    return cache[key]
+    return memo(spark, sf, "geo_cust", lambda: load_tables(
+        spark, sf)["customer"].select(
+        "c_custkey", "c_acctbal",
+        _coord("glat", F.col("c_custkey"), 1_200_000, -60.0)
+        .alias("lat"),
+        _coord("glon", F.col("c_custkey"), 3_600_000, -180.0)
+        .alias("lon"),
+    ).cache())
 
 
 def _site_points(spark, sf):
-    """Synthesized site dimension, cached once per (session, sf) —
-    same stored-column rationale as :func:`_customer_points`."""
-    cache = session_cache(spark, "_engine_geo_cache")
-    key = (sf.rstrip("/"), "site")
-    if key not in cache:
-        s = load_tables(spark, sf)["supplier"]
-        cache[key] = s.select(
-            "s_suppkey",
-            _coord("slat", F.col("s_suppkey"), 1_200_000, -60.0)
-            .alias("slat"),
-            _coord("slon", F.col("s_suppkey"), 3_600_000, -180.0)
-            .alias("slon"),
-        ).cache()
-    return cache[key]
+    """Synthesized site dimension, cached once — same stored-column
+    rationale as :func:`_customer_points`."""
+    return memo(spark, sf, "geo_site", lambda: load_tables(
+        spark, sf)["supplier"].select(
+        "s_suppkey",
+        _coord("slat", F.col("s_suppkey"), 1_200_000, -60.0)
+        .alias("slat"),
+        _coord("slon", F.col("s_suppkey"), 3_600_000, -180.0)
+        .alias("slon"),
+    ).cache())
 
 
 _CUST_PTS_SQL = f"""

@@ -19,8 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window as W, functions as F
 
-from ..io import (evict_persisted_lru, load_tables, session_cache,
-                  spread, table_count)
+from ..io import load_tables, memo, spread, table_count
 from ..registry import query
 from .util import hex32_sql, hexpoly_col, rnd, sql_rnd
 
@@ -256,12 +255,12 @@ def q_dedup_cluster(spark, sf):
     that survives 1000 executors).
     """
     # the labels are localCheckpointed (materialized) at fixpoint, so
-    # memoizing per (session, sf) lets q_dedup_resolve reuse them
-    # without re-running the iteration; session-attached (engine.io)
-    per_session = session_cache(spark, "_engine_cluster_cache")
-    if sf.rstrip("/") in per_session:
-        return per_session[sf.rstrip("/")]
+    # memoizing them lets q_dedup_resolve reuse them without
+    # re-running the iteration
+    return memo(spark, sf, "cluster", lambda: _cluster_labels(spark, sf))
 
+
+def _cluster_labels(spark, sf):
     # reliable checkpoint when the session has a checkpoint dir (set
     # via spark.sparkContext.setCheckpointDir on a real cluster);
     # executor-local otherwise
@@ -314,7 +313,6 @@ def q_dedup_cluster(spark, sf):
     else:
         raise RuntimeError("q_dedup_cluster: no fixpoint in 20 rounds")
     edges.unpersist()
-    per_session[sf.rstrip("/")] = labels
     return labels
 
 
@@ -788,17 +786,12 @@ def _lsh_topk_pairs(spark, sf, nplanes):
 def _sim_truth(spark, sf):
     """Exact brute-force top-20 pair set (q_sim_topk, the
     oracle-checked truth key) as a persisted (v1, v2, t=1) frame,
-    memoized per (session, sf) — computed ONCE and shared by every
-    ANN eval key (q_sim_eval_ivf, q_sim_eval_lsh), the
-    cache-check-first discipline. Fixture-grade by design: the
-    brute-force baseline exists only as the reference point."""
-    cache = session_cache(spark, "_engine_sim_truth_cache")
-    ck = sf.rstrip("/")
-    if ck not in cache:
-        cache[ck] = (q_sim_topk(spark, sf)
-                     .select("v1", "v2").withColumn("t", F.lit(1))
-                     .persist())
-    return cache[ck]
+    computed ONCE and shared by every ANN eval key (q_sim_eval_ivf,
+    q_sim_eval_lsh). Fixture-grade by design: the brute-force
+    baseline exists only as the reference point."""
+    return memo(spark, sf, "sim_truth", lambda: (
+        q_sim_topk(spark, sf).select("v1", "v2")
+        .withColumn("t", F.lit(1)).persist()))
 
 
 def _ann_eval_row(spark, truth, cand, grid_col, grid_val, extra_cols=()):
@@ -1336,16 +1329,16 @@ def _ivf_codebook(spark, sf):
     serve many; at 100 TB the codebook is still only nlist × d
     doubles while the training cost it amortizes is two full corpus
     passes. Returns (C, cl, nc): centroid matrix, cell ids, norms."""
+    return memo(spark, sf, "ivf_codebook",
+                lambda: _ivf_fit_or_load(spark, sf))
+
+
+def _ivf_fit_or_load(spark, sf):
     import os
     import shutil
 
     import numpy as np
     import pandas as pd
-
-    cache = session_cache(spark, "_engine_ivf_cache")
-    ckey = (sf.rstrip("/"), "codebook")
-    if ckey in cache:
-        return cache[ckey]
 
     path = ivf_codebook_path(sf)
     if not os.path.exists(path):
@@ -1402,8 +1395,7 @@ def _ivf_codebook(spark, sf):
     C = np.stack([np.asarray(r.centroid) for r in cent_rows])
     cl = np.asarray([r.cell0 for r in cent_rows])
     nc = np.sqrt((C * C).sum(1))
-    cache[ckey] = (C, cl, nc)
-    return cache[ckey]
+    return C, cl, nc
 
 
 @query("q_sim_ivf_topk")  # rows-only: IVF recall is engine-defined, not SQL
@@ -1506,8 +1498,7 @@ def q_sim_eval_ivf(spark, sf):
 
     Scale: exact truth is fixture-grade by design (the brute-force
     baseline exists only as the reference point — the q_dedup_eval
-    precedent), computed ONCE, persisted, and memoized per
-    (session, sf) — the cache-check-first discipline; each nprobe's
+    precedent), computed ONCE, persisted, and memoized; each nprobe's
     candidate set reduces through ONE full-outer join + ONE
     aggregate. Output is |nprobe grid| rows. (Truth frame + curve
     row construction shared with q_sim_eval_lsh via _sim_truth /
@@ -1767,15 +1758,11 @@ def minhash_base_index(spark, sf):
     """The persisted banded-signature index of the base corpus
     (doc_id %10 != 0) at the production (4, 2) config — the
     maintained artifact both incremental near-dup lanes (batch +
-    streaming) join their deltas against, memoized per (session, sf)
-    so the lanes share ONE materialization."""
-    cache = session_cache(spark, "_engine_minhash_index_cache")
-    ck = sf.rstrip("/")
-    if ck not in cache:
-        bands = _band_frame(
-            _minhash_signatures(_shingle_hashes(spark, sf)), 4, 2)
-        cache[ck] = bands.filter(F.col("doc_id") % 10 != 0).persist()
-    return cache[ck]
+    streaming) join their deltas against, memoized so the lanes share
+    ONE materialization."""
+    return memo(spark, sf, "minhash_index", lambda: _band_frame(
+        _minhash_signatures(_shingle_hashes(spark, sf)), 4, 2)
+        .filter(F.col("doc_id") % 10 != 0).persist())
 
 
 #: Shared oracle for the incremental NEAR-dup lanes (batch
@@ -2200,17 +2187,12 @@ def q_bm25_score(spark, sf):
         *[F.size(F.filter(ws, term_eq(term))).alias(f"tf{i}")
           for i, term in enumerate(_BM25_TERMS)],
     )
-    cache = session_cache(spark, "_engine_bm25_cache")
-    ckey = sf.rstrip("/")
-    if ckey not in cache:
-        stats = t.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dl").alias("sdl"),
-            *[F.count(F.when(F.col(f"tf{i}") > 0, 1)).alias(f"df{i}")
-              for i in range(len(_BM25_TERMS))],
-        ).collect()[0]
-        cache[ckey] = stats
-    st = cache[ckey]
+    st = memo(spark, sf, "bm25_stats", lambda: t.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("dl").alias("sdl"),
+        *[F.count(F.when(F.col(f"tf{i}") > 0, 1)).alias(f"df{i}")
+          for i in range(len(_BM25_TERMS))],
+    ).collect()[0])
     n = float(st["n"])
     avgdl = float(st["sdl"]) / n
     import math
@@ -2277,14 +2259,10 @@ def q_text_perplexity(spark, sf):
         "doc_id", F.explode(F.split("text", " ")).alias("w"))
     tf = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    # one scalar, same exact integer both sides — memoized per
-    # (session, sf) like the q_bm25_score statistics so warm calls
-    # don't pay an extra full token-stream job
-    cache = session_cache(spark, "_engine_perplexity_cache")
-    ckey = sf.rstrip("/")
-    if ckey not in cache:
-        cache[ckey] = tok.count()
-    total = cache[ckey]
+    # one scalar, same exact integer both sides — memoized like the
+    # q_bm25_score statistics so warm calls don't pay an extra full
+    # token-stream job
+    total = memo(spark, sf, "perplexity_tokens", tok.count)
     # ceil-quantize: floor(x*1e6 - 0.5) + 1 == ceil at half-grid,
     # mirrored exactly in the oracle so the int is bit-identical
     lp = uni.select(
@@ -2362,10 +2340,9 @@ def q_dedup_containment(spark, sf):
     force a path. All counts are exact integers; the score is one
     rounded division.
 
-    The persisted frames are memoized per (session, sf) — repeated
-    invocations in a long-lived session reuse ONE set of cached
-    blocks instead of stacking a fresh persist per call (the
-    q_dedup_cluster session_cache discipline, llm.py:196)."""
+    The persisted frames are memoized — repeated invocations in a
+    long-lived session reuse ONE set of cached blocks instead of
+    stacking a fresh persist per call."""
     mode = str(spark.conf.get(
         "spark.engine.containment.prefilter", "auto")).lower()
     if mode == "auto":
@@ -2373,11 +2350,8 @@ def q_dedup_containment(spark, sf):
                      > _PREFILTER_DOCS)
     else:
         prefilter = mode == "true"
-    per_session = session_cache(spark, "_engine_containment_cache")
-    ck = (sf.rstrip("/"), prefilter)
-    if ck in per_session:
-        sh, pairs = per_session[ck]
-    else:
+
+    def build():
         # sh feeds FOUR branches (sizes, both intersection sides,
         # and the MinHash signature chain — min over a multiset
         # equals min over its distinct set, so the banded signatures
@@ -2391,8 +2365,9 @@ def q_dedup_containment(spark, sf):
         # because only sh was cached — the candidate frame is tiny
         # (band-bucketed pairs), so caching it costs nothing and
         # drops the steady-state time the bench min-of-2 measures
-        pairs = _minhash_candidate_pairs(sh).persist()
-        per_session[ck] = (sh, pairs)
+        return sh, _minhash_candidate_pairs(sh).persist()
+
+    sh, pairs = memo(spark, sf, ("containment", prefilter), build)
     sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("d1"), "h")
     b2 = sh.select(F.col("doc_id").alias("d2"), "h")
@@ -3112,16 +3087,12 @@ def q_dedup_eval_bands(spark, sf):
     discipline). Like the other eval keys this composes the exact
     truth baseline, so it is fixture-grade by design and excluded
     from bench HEADLINE and scale probes. The persisted signature and
-    truth frames are memoized per (session, sf) — the cache-check-
-    first discipline, so repeated invocations re-persist nothing."""
-    cache = session_cache(spark, "_engine_bands_eval_cache")
-    ck = sf.rstrip("/")
-    if ck not in cache:
-        cache[ck] = (
-            _minhash_signatures(_shingle_hashes(spark, sf)).persist(),
-            q_dedup_ngram_jaccard(spark, sf)
-            .select("d1", "d2").withColumn("t", F.lit(1)).persist())
-    sig, truth = cache[ck]
+    truth frames are memoized, so repeated invocations re-persist
+    nothing."""
+    sig, truth = memo(spark, sf, "bands_eval", lambda: (
+        _minhash_signatures(_shingle_hashes(spark, sf)).persist(),
+        q_dedup_ngram_jaccard(spark, sf)
+        .select("d1", "d2").withColumn("t", F.lit(1)).persist()))
     out = None
     for B, R in _BAND_CONFIGS:
         cand = _band_pairs(sig, B, R).withColumn("c", F.lit(1))
@@ -3357,8 +3328,8 @@ def q_tokenizer_fit(spark, sf):
     shuffle); every merge round operates on the |word types| table —
     corpus-size-INDEPENDENT after that first pass, which is why real
     tokenizer fits run on word counts, not raw text. The type table
-    is persisted once (memoized per session/sf — the q_basket_rules
-    discipline); each round collects its 1-row argmax (the bounded-
+    is persisted once (memoized — the q_basket_rules discipline);
+    each round collects its 1-row argmax (the bounded-
     side-input discipline — BPE is inherently sequential, the
     q_cluster_kmeans iterative shape) and feeds the pair back as
     replace() LITERALS, so round r is ONE pass over the persisted
@@ -3378,51 +3349,48 @@ def _bpe_type_table(spark, sf):
     """The persisted (seq, freq) word-TYPE table every tokenizer key
     starts from — seq is the initial char-split double-space form of
     each distinct corpus word (length >= 2), freq its corpus count.
-    Memoized per (session, sf): the ONE corpus-sized aggregate of the
-    whole tokenizer lifecycle."""
-    per_session = session_cache(spark, "_engine_bpe_cache")
-    ck = sf.rstrip("/")
-    if ck not in per_session:
+    The ONE corpus-sized aggregate of the whole tokenizer lifecycle."""
+    def build():
         d = load_tables(spark, sf)["documents"]
         w = (d.select(F.explode(F.split("text", " ")).alias("word"))
              .filter(F.length("word") >= 2)
              .groupBy("word").agg(F.count(F.lit(1)).alias("freq")))
-        per_session[ck] = w.select(
+        return w.select(
             F.concat(F.lit(" "),
                      F.trim(F.regexp_replace("word", "(.)", "$1  ")),
                      F.lit(" ")).alias("seq"),
             "freq").persist()
-    return per_session[ck]
+
+    return memo(spark, sf, "bpe_types", build)
 
 
 def _bpe_fit_pairs(spark, sf):
     """Learned BPE merges [(rank, pair, n), ...] — the sequential
     merge loop shared by q_tokenizer_fit and q_tokenizer_apply,
-    memoized per (session, sf) so the lifecycle runs the fit once."""
-    per_session = session_cache(spark, "_engine_bpe_cache")
-    mk = ("merges", sf.rstrip("/"))
-    if mk in per_session:
-        return per_session[mk]
-    s = _bpe_type_table(spark, sf)
-    pairs = []
-    for rank in range(1, _BPE_MERGES + 1):
-        ts = F.split(F.trim(F.col("seq")), "  ")
-        pair_expr = F.transform(
-            F.sequence(F.lit(1), F.size(ts) - 1),
-            lambda i: F.concat(F.element_at(ts, i), F.lit(" "),
-                               F.element_at(ts, i + 1)))
-        b = (s.filter(F.size(ts) >= 2)
-             .select(F.explode(pair_expr).alias("pair"), "freq")
-             .groupBy("pair").agg(F.sum("freq").alias("n"))
-             .orderBy(F.col("n").desc(), "pair").limit(1).collect())[0]
-        pairs.append((rank, b["pair"], int(b["n"])))
-        spaced = " " + b["pair"].replace(" ", "  ") + " "
-        fused = " " + b["pair"].replace(" ", "") + " "
-        s = s.select(F.replace(
-            F.col("seq"), F.lit(spaced), F.lit(fused)).alias("seq"),
-            "freq")
-    per_session[mk] = pairs
-    return pairs
+    memoized so the lifecycle runs the fit once."""
+    def build():
+        s = _bpe_type_table(spark, sf)
+        pairs = []
+        for rank in range(1, _BPE_MERGES + 1):
+            ts = F.split(F.trim(F.col("seq")), "  ")
+            pair_expr = F.transform(
+                F.sequence(F.lit(1), F.size(ts) - 1),
+                lambda i: F.concat(F.element_at(ts, i), F.lit(" "),
+                                   F.element_at(ts, i + 1)))
+            b = (s.filter(F.size(ts) >= 2)
+                 .select(F.explode(pair_expr).alias("pair"), "freq")
+                 .groupBy("pair").agg(F.sum("freq").alias("n"))
+                 .orderBy(F.col("n").desc(), "pair").limit(1)
+                 .collect())[0]
+            pairs.append((rank, b["pair"], int(b["n"])))
+            spaced = " " + b["pair"].replace(" ", "  ") + " "
+            fused = " " + b["pair"].replace(" ", "") + " "
+            s = s.select(F.replace(
+                F.col("seq"), F.lit(spaced), F.lit(fused)).alias("seq"),
+                "freq")
+        return pairs
+
+    return memo(spark, sf, "bpe_merges", build)
 
 
 def _bpe_apply_ctes(n_merges: int) -> str:
@@ -3478,8 +3446,8 @@ def q_tokenizer_apply(spark, sf):
     exactly two narrow passes (type extraction + the stats join) and
     one count aggregate. All-integer output: trivially hash-stable.
 
-    The per-doc counts frame is memoized per (session, sf) and
-    persisted (round-15: the BPE loading chain — q_token_budget_bpe →
+    The per-doc counts frame is memoized and persisted (round-15:
+    the BPE loading chain — q_token_budget_bpe →
     q_mix_schedule_bpe → q_pack_schedule_bpe → q_pack_unit_ablation —
     composes this key up to three times per downstream action, and
     without the memo every call re-ran the corpus explode + stats
@@ -3488,42 +3456,39 @@ def q_tokenizer_apply(spark, sf):
     memoizes). |docs| rows x 4 integer columns — a fit-shaped
     side-input; at 100 TB this is the per-doc token-count table a
     pipeline materializes to storage once per tokenizer version."""
-    # dedicated cache (NOT _engine_bpe_cache): the LRU evict below
-    # must never be able to drop the fit's memoized merges/type table
-    per_session = session_cache(spark, "_engine_bpe_apply_cache")
-    ak = sf.rstrip("/")
-    if ak in per_session:
-        return per_session[ak]
-    # the learned merges come from the shared memoized fit loop, as
-    # replace() literals — the fit lineage executes once per session
-    # (round-9 ADVICE; now load-bearing at 12 merges)
-    pairs = {r: p for r, p, _ in _bpe_fit_pairs(spark, sf)}
-    d = load_tables(spark, sf)["documents"]
-    dw = (d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-          .filter(F.length("word") > 0))
-    s = dw.select("word").distinct().select(
-        "word",
-        F.concat(F.lit(" "),
-                 F.trim(F.regexp_replace("word", "(.)", "$1  ")),
-                 F.lit(" ")).alias("seq"))
-    for r in range(1, _BPE_MERGES + 1):
-        spaced = " " + pairs[r].replace(" ", "  ") + " "
-        fused = " " + pairs[r].replace(" ", "") + " "
-        s = s.select("word", F.replace(
-            F.col("seq"), F.lit(spaced), F.lit(fused)).alias("seq"))
-    nt = s.select(
-        "word",
-        F.size(F.split(F.trim("seq"), "  ")).cast("long").alias("n_tok"))
-    out = (
-        dw.join(F.broadcast(nt), "word")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_words"),
-             F.sum(F.length("word")).cast("long").alias("n_chars"),
-             F.sum("n_tok").cast("long").alias("n_tokens"))
-    )
-    evict_persisted_lru(per_session, keep=3)
-    per_session[ak] = out.persist()
-    return per_session[ak]
+    def build():
+        # the learned merges come from the shared memoized fit loop,
+        # as replace() literals — the fit lineage executes once per
+        # session (round-9 ADVICE; now load-bearing at 12 merges)
+        pairs = {r: p for r, p, _ in _bpe_fit_pairs(spark, sf)}
+        d = load_tables(spark, sf)["documents"]
+        dw = (d.select("doc_id",
+                       F.explode(F.split("text", " ")).alias("word"))
+              .filter(F.length("word") > 0))
+        s = dw.select("word").distinct().select(
+            "word",
+            F.concat(F.lit(" "),
+                     F.trim(F.regexp_replace("word", "(.)", "$1  ")),
+                     F.lit(" ")).alias("seq"))
+        for r in range(1, _BPE_MERGES + 1):
+            spaced = " " + pairs[r].replace(" ", "  ") + " "
+            fused = " " + pairs[r].replace(" ", "") + " "
+            s = s.select("word", F.replace(
+                F.col("seq"), F.lit(spaced), F.lit(fused)).alias("seq"))
+        nt = s.select(
+            "word",
+            F.size(F.split(F.trim("seq"), "  ")).cast("long")
+            .alias("n_tok"))
+        out = (
+            dw.join(F.broadcast(nt), "word")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_words"),
+                 F.sum(F.length("word")).cast("long").alias("n_chars"),
+                 F.sum("n_tok").cast("long").alias("n_tokens"))
+        )
+        return out.persist()
+
+    return memo(spark, sf, "bpe_apply", build)
 
 
 @query("q_tokenizer_vocab", oracle=f"""
@@ -3939,16 +3904,12 @@ def q_dedup_eval_simhash(spark, sf):
     q_dedup_eval_phash's truth join and excluded from bench HEADLINE
     and the scale probes (the q_dedup_eval rationale: at scale this
     runs on a sampled slice). Signature and truth frames are memoized
-    per (session, sf) and persisted; all grid rows reduce through ONE
-    full-outer join + ONE aggregate, unstacked via stack()."""
-    cache = session_cache(spark, "_engine_simhash_eval_cache")
-    ck = sf.rstrip("/")
-    if ck not in cache:
-        cache[ck] = (
-            q_dedup_simhash(spark, sf).persist(),
-            q_dedup_ngram_jaccard(spark, sf)
-            .select("d1", "d2").withColumn("t", F.lit(1)).persist())
-    sim, truth = cache[ck]
+    and persisted; all grid rows reduce through ONE full-outer join +
+    ONE aggregate, unstacked via stack()."""
+    sim, truth = memo(spark, sf, "simhash_eval", lambda: (
+        q_dedup_simhash(spark, sf).persist(),
+        q_dedup_ngram_jaccard(spark, sf)
+        .select("d1", "d2").withColumn("t", F.lit(1)).persist()))
     n_docs = sim.count()  # memoized+persisted: the count is cheap
     if n_docs > _SIMHAM_TRUTH_MAX_DOCS:
         raise ValueError(
@@ -4164,15 +4125,10 @@ def q_quality_drift(spark, sf):
     # (|sources| x 3) and every marginal derives from it by a
     # further |sources|x3-row aggregate — four independent groupBys
     # over the documents table would rescan and re-score the corpus
-    # four times. Memoized+persisted per (session, sf) — the
-    # eval-key cache discipline, so repeated calls re-persist
-    # nothing and the cache is eviction-managed like its siblings.
-    cache = session_cache(spark, "_engine_qdrift_cache")
-    ck = sf.rstrip("/")
-    if ck not in cache:
-        cache[ck] = b.groupBy("source", "bucket").agg(
-            F.count(F.lit(1)).alias("n_sb")).persist()
-    sc = cache[ck]
+    # four times. Memoized+persisted, so repeated calls re-persist
+    # nothing.
+    sc = memo(spark, sf, "qdrift", lambda: b.groupBy("source", "bucket")
+              .agg(F.count(F.lit(1)).alias("n_sb")).persist())
     ns = sc.groupBy("source").agg(F.sum("n_sb").alias("n_s"))
     bc = sc.groupBy("bucket").agg(F.sum("n_sb").alias("n_b"))
     nn = sc.agg(F.sum("n_sb").alias("n"))
@@ -4431,9 +4387,7 @@ def _seminc_parts(spark, sf):
     assignments plus the collected base centroids {cl: [64 floats]}
     — shared by q_dedup_incremental_semantic and its streaming twin
     so the cluster structure cannot desync."""
-    cache = session_cache(spark, "_engine_seminc_cache")
-    ck = sf.rstrip("/")
-    if ck not in cache:
+    def build():
         e = load_tables(spark, sf)["embeddings"]
         xa = (e.select("vec_id", "label",
                        F.posexplode("embedding").alias("i0", "vf"))
@@ -4458,9 +4412,9 @@ def _seminc_parts(spark, sf):
         cents = {}
         for r in cb.collect():
             cents.setdefault(r["cl"], [0.0] * 64)[r["i"] - 1] = r["cv"]
-        cache[ck] = (assign(xb).persist(), assign(xd).persist(),
-                     cents)
-    return cache[ck]
+        return assign(xb).persist(), assign(xd).persist(), cents
+
+    return memo(spark, sf, "seminc", build)
 
 
 @query("q_dedup_incremental_semantic", oracle=DEDUP_INCR_SEM_ORACLE)

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import load_tables, session_cache
+from ..io import load_tables, memo
 from ..multimodal import attach_payload, resize_pool, sample_frames
 from ..registry import query
 from .util import rnd, sql_rnd
@@ -279,21 +279,15 @@ def _phash_hashes(spark, sf):
             yield pd.DataFrame(
                 out, columns=["doc_id", "b0", "b1", "b2", "b3"])
 
-    # cache-check FIRST (the q_tokenizer_fit/q_basket_rules pattern,
-    # round-9 ADVICE): build the hash frame only on a miss
-    per_session = session_cache(spark, "_engine_phash_cache")
-    ck = sf.rstrip("/")
-    if ck in per_session:
-        h = per_session[ck]
-    else:
+    def build():
         d = load_tables(spark, sf)["documents"]
         p = attach_payload(d).filter(F.col("n_bytes") > 0) \
             .select("doc_id", "payload")
         h = p.mapInPandas(
             kernel, "doc_id long, b0 long, b1 long, b2 long, b3 long")
-        h = h.persist()  # feeds banding + two pair-verification joins
-        per_session[ck] = h
-    return h
+        return h.persist()  # feeds banding + two pair-verification joins
+
+    return memo(spark, sf, "phash", build)
 
 
 _PHASH_PIGEON = 3  # 4 intact-band pigeonhole bound: hamming <= 3

@@ -155,22 +155,10 @@ def q_stream_incr_join_refresh(spark, sf):
     refresh shapes. Lives in reports.py because the composed oracle
     needs q_incr_join_refresh registered first (module loads
     last)."""
-    import hashlib
-    import os
-
-    from ..io import session_cache
     from .incremental import _ijr_lane, _ijr_merge, _ijr_parts
-    from .streaming_q import _stage_source
+    from .streaming_q import _run_stream
 
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "incr_join")
-    if key not in per_session:
-        name = ("stream_incrjoin_"
-                + hashlib.md5(os.path.abspath(sf).encode())
-                .hexdigest()[:8])
-        src = _stage_source(sf, table="orders")
-        orders = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
+    def build(orders):
         dlt = (orders.filter(F.col("o_orderkey") % 13 == 0)
                .select("o_custkey", "o_orderstatus",
                        F.floor(F.col("o_totalprice") * 100
@@ -183,12 +171,10 @@ def q_stream_incr_join_refresh(spark, sf):
              .groupBy("o_orderstatus", "c_mktsegment")
              .agg(F.count(F.lit(1)).cast("long").alias("n_orders"),
                   F.sum("cents").cast("long").alias("total_cents")))
-        q = (g.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    d1 = spark.table(per_session[key])
+        return g, "complete"
+
+    d1 = spark.table(_run_stream(spark, sf, "incrjoin", build,
+                                 one_batch=True, table="orders"))
     o, c = _ijr_parts(spark, sf)
     base_o = o.filter(F.col("o_orderkey") % 13 != 0)
     base_c = c.filter(F.col("c_custkey") % 17 != 0)

@@ -11,7 +11,7 @@ from functools import reduce
 
 from pyspark.sql import functions as F
 
-from ..io import TABLES, load_tables
+from ..io import TABLES, load_tables, memo
 from ..registry import query
 from .util import hex32_sql, hexpoly_col, hexpoly_sql, rnd, sql_dsum, sql_rnd
 
@@ -78,23 +78,21 @@ def q_sink_roundtrip(spark, sf):
     returns the read-back result. Oracle-checked with q_join_inner's
     SQL — the parquet round trip must preserve every value and type
     bit-exactly, so the sink itself is inside the hash gate. The write
-    happens once per (session, sf) like every prepared artifact."""
+    is memoized like every prepared artifact."""
     import hashlib
     import os
     import tempfile
 
-    from ..io import session_cache
     from .joins import q_join_inner
 
-    per_session = session_cache(spark, "_engine_sink_cache")
-    key = sf.rstrip("/")
-    if key not in per_session:
-        digest = hashlib.md5(os.path.abspath(key).encode()).hexdigest()[:8]
+    def build():
+        digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
         out = os.path.join(tempfile.gettempdir(),
                            f"engine_sink_{digest}_{os.getpid()}", "rollup")
         q_join_inner(spark, sf).write.mode("overwrite").parquet(out)
-        per_session[key] = out
-    return spark.read.parquet(per_session[key])
+        return out
+
+    return spark.read.parquet(memo(spark, sf, "sink_roundtrip", build))
 
 
 @query("q_filter_pred", oracle="""

@@ -3,7 +3,7 @@
 The engine's canonical storage is parquet (columnar, predicate
 pushdown, the only sane 100 TB format), but a corpus pipeline ingests
 CSV and JSON-lines too. Each key here writes a slice of a driver
-table to the text format once per (session, sf), reads it back
+table to the text format once (memoized), reads it back
 through the corresponding Spark source with an EXPLICIT schema (schema
 inference is a full extra pass at scale — never in production plans),
 and aggregates; the oracle runs the same aggregate on the original
@@ -20,36 +20,35 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from ..io import load_tables, session_cache
+from ..io import load_tables, memo
 from ..registry import query
 from .util import dsum, hexpoly_col, hexpoly_sql, sql_dsum
 
 
 def _roundtrip_dir(spark, sf: str, fmt: str) -> str:
-    """Write the slice for ``fmt`` once per (session, sf); returns dir."""
-    per_session = session_cache(spark, "_engine_source_cache")
-    key = (sf.rstrip("/"), fmt)
-    if key in per_session:
-        return per_session[key]
-    digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
-    # per-process artifact dir: mode("overwrite") deletes before
-    # rewriting, so a shared path would let two concurrent processes
-    # on the same sf clobber files the other is mid-read
-    out = os.path.join(
-        tempfile.gettempdir(), f"engine_src_{fmt}_{digest}_{os.getpid()}")
-    t = load_tables(spark, sf)
-    if fmt == "csv":
-        (t["orders"].select("o_orderkey", "o_orderstatus", "o_totalprice")
-         .write.mode("overwrite").option("header", "true").csv(out))
-    elif fmt == "orc":
-        (t["lineitem"].select("l_orderkey", "l_returnflag", "l_quantity",
-                              "l_extendedprice")
-         .write.mode("overwrite").orc(out))
-    else:
-        (t["events"].select("event_id", "event_type", "value")
-         .write.mode("overwrite").json(out))
-    per_session[key] = out
-    return out
+    """Write the slice for ``fmt`` once; returns dir."""
+    def build():
+        digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
+        # per-process artifact dir: mode("overwrite") deletes before
+        # rewriting, so a shared path would let two concurrent
+        # processes on the same sf clobber files the other is mid-read
+        out = os.path.join(tempfile.gettempdir(),
+                           f"engine_src_{fmt}_{digest}_{os.getpid()}")
+        t = load_tables(spark, sf)
+        if fmt == "csv":
+            (t["orders"].select("o_orderkey", "o_orderstatus",
+                                "o_totalprice")
+             .write.mode("overwrite").option("header", "true").csv(out))
+        elif fmt == "orc":
+            (t["lineitem"].select("l_orderkey", "l_returnflag",
+                                  "l_quantity", "l_extendedprice")
+             .write.mode("overwrite").orc(out))
+        else:
+            (t["events"].select("event_id", "event_type", "value")
+             .write.mode("overwrite").json(out))
+        return out
+
+    return memo(spark, sf, ("source", fmt), build)
 
 
 @query("q_source_csv", oracle=f"""
@@ -82,7 +81,7 @@ FROM documents WHERE lang = 'en' GROUP BY source
 """)
 def q_sink_partitioned(spark, sf):
     """Hive-partitioned parquet sink + partition-pruned read-back:
-    documents written ``partitionBy(lang)`` once per (session, sf),
+    documents written ``partitionBy(lang)`` once (memoized),
     then read with a ``lang = 'en'`` filter that must resolve as a
     PARTITION filter (directory pruning — zero I/O for other
     languages), aggregated, and hash-matched against the original
@@ -90,16 +89,16 @@ def q_sink_partitioned(spark, sf):
     predicate on the partition column skips data before any row is
     read. The pruning itself is pinned in
     tests/test_plans_pipeline.py."""
-    per_session = session_cache(spark, "_engine_source_cache")
-    key = (sf.rstrip("/"), "part")
-    if key not in per_session:
+    def build():
         digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
         out = os.path.join(tempfile.gettempdir(),
                            f"engine_sink_part_{digest}_{os.getpid()}")
         (load_tables(spark, sf)["documents"]
          .write.mode("overwrite").partitionBy("lang").parquet(out))
-        per_session[key] = out
-    df = spark.read.parquet(per_session[key])
+        return out
+
+    path = memo(spark, sf, ("source", "part"), build)
+    df = spark.read.parquet(path)
     return (
         df.filter(F.col("lang") == "en")
         .groupBy("source")
@@ -168,9 +167,7 @@ def q_source_text(spark, sf):
     The fixture text is tab/newline-free (record framing is the
     LOADER's contract — documents with embedded newlines belong in
     parquet/JSON, not line files)."""
-    per_session = session_cache(spark, "_engine_source_cache")
-    key = (sf.rstrip("/"), "text")
-    if key not in per_session:
+    def build():
         digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
         out = os.path.join(tempfile.gettempdir(),
                            f"engine_src_text_{digest}_{os.getpid()}")
@@ -183,8 +180,10 @@ def q_source_text(spark, sf):
                              F.coalesce(F.col("text"), F.lit("")))
          .alias("value"))
          .write.mode("overwrite").text(out))
-        per_session[key] = out
-    lines = spark.read.text(per_session[key])
+        return out
+
+    path = memo(spark, sf, ("source", "text"), build)
+    lines = spark.read.text(path)
     parsed = lines.select(
         F.substring_index("value", "\t", 1).cast("long").alias("doc_id"),
         F.expr("substring(value, instr(value, '\t') + 1)").alias("text"),
@@ -216,9 +215,7 @@ def q_compaction(spark, sf):
     from footer-bound (thousands of file opens per scan) to
     bandwidth-bound. The file-count drop is pinned in
     tests/test_sources_extra.py."""
-    per_session = session_cache(spark, "_engine_source_cache")
-    key = (sf.rstrip("/"), "compact")
-    if key not in per_session:
+    def build():
         digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
         frag = os.path.join(tempfile.gettempdir(),
                             f"engine_frag_{digest}_{os.getpid()}")
@@ -233,8 +230,10 @@ def q_compaction(spark, sf):
             for f in os.listdir(frag) if f.endswith(".parquet"))
         target = max(1, -(-nbytes // (128 * 1024 * 1024)))
         fragmented.repartition(target).write.mode("overwrite").parquet(comp)
-        per_session[key] = comp
-    df = spark.read.parquet(per_session[key])
+        return comp
+
+    path = memo(spark, sf, ("source", "compact"), build)
+    df = spark.read.parquet(path)
     return (
         df.groupBy("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n"),
@@ -321,9 +320,7 @@ def q_time_travel(spark, sf):
     unchanged to a version= layout); history audits like this one
     scan only the versions they name. Diffs are derived by content
     hash so the oracle can replay them deterministically."""
-    per_session = session_cache(spark, "_engine_source_cache")
-    key = (sf.rstrip("/"), "timetravel")
-    if key not in per_session:
+    def build():
         digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
         root = os.path.join(tempfile.gettempdir(),
                             f"engine_tt_{digest}_{os.getpid()}")
@@ -342,9 +339,11 @@ def q_time_travel(spark, sf):
         for ver, df in ((0, v0), (1, v1), (2, v2)):
             df.write.mode("overwrite").parquet(
                 os.path.join(root, f"version={ver}"))
-        per_session[key] = root
-    hist = spark.read.option("basePath", per_session[key]).parquet(
-        *[os.path.join(per_session[key], f"version={v}") for v in (0, 1, 2)])
+        return root
+
+    path = memo(spark, sf, ("source", "timetravel"), build)
+    hist = spark.read.option("basePath", path).parquet(
+        *[os.path.join(path, f"version={v}") for v in (0, 1, 2)])
     return (
         hist.groupBy("version")
         .agg(F.count(F.lit(1)).alias("n_rows"),
@@ -376,9 +375,7 @@ def q_source_json_corrupt(spark, sf):
     the same policy ships rejects to a badRecordsPath and alerts on
     the '_corrupt' row's rate — the schema, mode, and accounting
     here are exactly that plan."""
-    per_session = session_cache(spark, "_engine_source_cache")
-    key = (sf.rstrip("/"), "json_corrupt")
-    if key not in per_session:
+    def build():
         digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
         out = os.path.join(tempfile.gettempdir(),
                            f"engine_src_jcorrupt_{digest}_{os.getpid()}")
@@ -392,13 +389,15 @@ def q_source_json_corrupt(spark, sf):
                                        "value")))
         (ev.select(line.alias("value"))
          .write.mode("overwrite").text(out))
-        per_session[key] = out
+        return out
+
+    path = memo(spark, sf, ("source", "json_corrupt"), build)
     df = (spark.read
           .schema("event_id long, event_type string, value double,"
                   " _bad string")
           .option("mode", "PERMISSIVE")
           .option("columnNameOfCorruptRecord", "_bad")
-          .json(per_session[key]))
+          .json(path))
     return (df.groupBy(
                 F.when(F.col("_bad").isNotNull(), F.lit("_corrupt"))
                  .otherwise(F.col("event_type")).alias("event_type"))
@@ -433,9 +432,7 @@ def q_source_csv_corrupt(spark, sf):
     which is the accounting a badRecordsPath alert needs. Same
     100 TB posture as the JSONL twin: schema, mode, and the
     '_corrupt'-rate alert are the production plan."""
-    per_session = session_cache(spark, "_engine_source_cache")
-    key = (sf.rstrip("/"), "csv_corrupt")
-    if key not in per_session:
+    def build():
         digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
         out = os.path.join(tempfile.gettempdir(),
                            f"engine_src_ccorrupt_{digest}_{os.getpid()}")
@@ -447,13 +444,15 @@ def q_source_csv_corrupt(spark, sf):
              .otherwise(F.col("value").cast("string")))
         (ev.select(line.alias("value"))
          .write.mode("overwrite").text(out))
-        per_session[key] = out
+        return out
+
+    path = memo(spark, sf, ("source", "csv_corrupt"), build)
     df = (spark.read
           .schema("event_id long, event_type string, value double,"
                   " _bad string")
           .option("mode", "PERMISSIVE")
           .option("columnNameOfCorruptRecord", "_bad")
-          .csv(per_session[key]))
+          .csv(path))
     return (df.groupBy(
                 F.when(F.col("_bad").isNotNull(), F.lit("_corrupt"))
                  .otherwise(F.col("event_type")).alias("event_type"))

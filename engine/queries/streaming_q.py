@@ -28,9 +28,10 @@ import tempfile
 
 from pyspark.sql import Window as W, functions as F
 
-from ..io import load_tables, session_cache
+from ..io import load_tables, memo
 from ..registry import ORACLE as _ORACLE, query
-from ..streaming import read_event_stream
+from ..session import configure
+from ..streaming import _with_event_time, event_stream_schema
 from .events import CDC_LOG_SQL, SESSION_CAPPED_ORACLE
 from .analytics_extra import AB_WELCH_ORACLE, BENFORD_ORACLE
 from .incremental import GROUP_TOPK_ORACLE
@@ -108,11 +109,15 @@ def _stage_source_time_sliced(sf: str, n_slices: int = 12) -> str:
 
 
 def _run_stream(spark, sf: str, kind: str, build, one_batch: bool = False,
-                src: str | None = None) -> str:
-    """Run a bounded stream to completion once per (session, sf) —
-    memory-sink tables live in the session, so the memo is
-    session-attached (engine.io.session_cache); returns the table
-    name.
+                src: str | None = None, table: str | None = None) -> str:
+    """Run a bounded stream to completion once per (session, sf) into
+    the memory sink ``stream_{kind}_{sf digest}`` — memory-sink tables
+    live in the session, so the memo is too; returns the table name.
+    ``build(stream)`` returns ``(frame, output mode)``.
+
+    The default source is the staged events table with ``ts``
+    normalized to event time; ``table`` streams another fixture table
+    (staged the same way) with its columns as stored.
 
     ``one_batch=True`` replays the whole fixture as a single
     micro-batch (no maxFilesPerTrigger): required for append-mode
@@ -126,30 +131,26 @@ def _run_stream(spark, sf: str, kind: str, build, one_batch: bool = False,
     memo check, so a non-trivial stager (the time-sliced sort+write)
     is never paid when the stream result is already cached
     (round-14 ADVICE)."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), kind)
-    if key in per_session:
-        return per_session[key]
-    digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
-    name = f"stream_{kind}_{digest}"
-    if callable(src):
-        src = src()
-    src = src or _stage_source(sf)
-    if one_batch:
-        from ..streaming import _with_event_time, event_stream_schema
+    def run():
+        configure(spark)
+        digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
+        name = f"stream_{kind}_{digest}"
+        d = src() if callable(src) else src
+        d = d or _stage_source(sf, table or "events")
+        reader = spark.readStream.schema(event_stream_schema(spark, d))
+        if not one_batch:
+            reader = reader.option("maxFilesPerTrigger", 4)
+        stream = reader.parquet(d)
+        if table is None:
+            stream = _with_event_time(stream)
+        df, mode = build(stream)
+        q = (df.writeStream.outputMode(mode)
+             .format("memory").queryName(name).start())
+        q.processAllAvailable()
+        q.stop()
+        return name
 
-        events = _with_event_time(
-            spark.readStream.schema(
-                event_stream_schema(spark, src)).parquet(src))
-    else:
-        events = read_event_stream(spark, src)
-    df, mode = build(events)
-    q = (df.writeStream.outputMode(mode)
-         .format("memory").queryName(name).start())
-    q.processAllAvailable()
-    q.stop()
-    per_session[key] = name
-    return name
+    return memo(spark, sf, ("stream", kind), run)
 
 
 @query("q_stream_tumbling", oracle=f"""
@@ -512,54 +513,52 @@ def q_stream_stream_left_join(spark, sf):
     unbounded stream."""
     import datetime
 
-    from ..streaming import (_with_event_time, attribution_left_join,
-                             event_stream_schema)
+    from ..streaming import attribution_left_join
 
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "ss_left")
-    if key in per_session:
-        return spark.table(per_session[key])
-    digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
-    name = f"stream_ss_left_{digest}"
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"engine_stream_ssl_{digest}_{os.getpid()}")
-    os.makedirs(src, exist_ok=True)
-    link = os.path.join(src, "events.parquet")
-    if os.path.lexists(link) and not os.path.exists(link):
-        os.unlink(link)
-    if not os.path.lexists(link):
-        os.symlink(
-            os.path.abspath(f"{sf.rstrip('/')}/events.parquet"), link)
+    def run():
+        digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
+        name = f"stream_ss_left_{digest}"
+        src = os.path.join(
+            tempfile.gettempdir(),
+            f"engine_stream_ssl_{digest}_{os.getpid()}")
+        os.makedirs(src, exist_ok=True)
+        link = os.path.join(src, "events.parquet")
+        if os.path.lexists(link) and not os.path.exists(link):
+            os.unlink(link)
+        if not os.path.lexists(link):
+            os.symlink(
+                os.path.abspath(f"{sf.rstrip('/')}/events.parquet"), link)
 
-    raw = _with_event_time(spark.read.parquet(link))
-    hi = raw.agg(F.max("ts")).collect()[0][0]
-    events = _with_event_time(
-        spark.readStream.schema(event_stream_schema(spark, src))
-        .parquet(src))
-    q = (attribution_left_join(events)
-         .writeStream.outputMode("append")
-         .format("memory").queryName(name).start())
-    q.processAllAvailable()
-    # two sentinel rounds, one row per join side each (see docstring)
-    for i in range(2):
-        sent = raw.limit(1).select(
-            F.lit(10 ** 9 + 2 * i).alias("event_id"),
-            F.lit(hi + datetime.timedelta(hours=12 + i)).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit("view").alias("event_type"),
-            F.lit(0.0).alias("value"), F.lit("{}").alias("props"),
-        ).unionAll(raw.limit(1).select(
-            F.lit(10 ** 9 + 2 * i + 1).alias("event_id"),
-            F.lit(hi + datetime.timedelta(hours=12 + i)).alias("ts"),
-            F.lit(-2).cast("long").alias("user_id"),
-            F.lit("purchase").alias("event_type"),
-            F.lit(0.0).alias("value"), F.lit("{}").alias("props"),
-        ))
-        sent.write.mode("append").parquet(src)
+        raw = _with_event_time(spark.read.parquet(link))
+        hi = raw.agg(F.max("ts")).collect()[0][0]
+        events = _with_event_time(
+            spark.readStream.schema(event_stream_schema(spark, src))
+            .parquet(src))
+        q = (attribution_left_join(events)
+             .writeStream.outputMode("append")
+             .format("memory").queryName(name).start())
         q.processAllAvailable()
-    q.stop()
-    per_session[key] = name
+        # two sentinel rounds, one row per join side each (see docstring)
+        for i in range(2):
+            sent = raw.limit(1).select(
+                F.lit(10 ** 9 + 2 * i).alias("event_id"),
+                F.lit(hi + datetime.timedelta(hours=12 + i)).alias("ts"),
+                F.lit(-1).cast("long").alias("user_id"),
+                F.lit("view").alias("event_type"),
+                F.lit(0.0).alias("value"), F.lit("{}").alias("props"),
+            ).unionAll(raw.limit(1).select(
+                F.lit(10 ** 9 + 2 * i + 1).alias("event_id"),
+                F.lit(hi + datetime.timedelta(hours=12 + i)).alias("ts"),
+                F.lit(-2).cast("long").alias("user_id"),
+                F.lit("purchase").alias("event_type"),
+                F.lit(0.0).alias("value"), F.lit("{}").alias("props"),
+            ))
+            sent.write.mode("append").parquet(src)
+            q.processAllAvailable()
+        q.stop()
+        return name
+
+    name = memo(spark, sf, ("stream", "ss_left"), run)
     return spark.table(name).filter(F.col("view_id") < 10 ** 9)
 
 
@@ -758,17 +757,13 @@ def q_stream_sink_idempotent(spark, sf):
     sibling of q_merge_idempotent's last_batch watermark)."""
     import shutil
 
-    from ..streaming import _with_event_time, event_stream_schema
-
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "sink_idem")
-    if key not in per_session:
+    def run():
         digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
         src = _stage_source(sf)
         sink = os.path.join(
             tempfile.gettempdir(),
             f"engine_sink_idem_{digest}_{os.getpid()}")
-        # a session-cache miss means THIS session is about to run the
+        # a memo miss means THIS session is about to run the
         # stream from scratch — stale commit dirs from a previous
         # session (possibly over a regenerated fixture at the same
         # path) would absorb every new batch and serve old data, so
@@ -817,8 +812,9 @@ def q_stream_sink_idempotent(spark, sf):
                 assert not committed, (
                     f"restart replay leaked past the idempotence "
                     f"guard: {committed}")
-        per_session[key] = sink
-    df = spark.read.parquet(per_session[key])
+        return sink
+
+    df = spark.read.parquet(memo(spark, sf, ("stream", "sink_idem"), run))
     return (
         df.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"),
@@ -850,7 +846,7 @@ def q_stream_group_topk(spark, sf):
     sketch."""
     from .incremental import _GT_K, _MG_K, _MG_LIMIT
 
-    def build_stream():
+    def build(docs):
         import heapq
         from collections import Counter
 
@@ -882,9 +878,6 @@ def q_stream_group_topk(spark, sf):
                 "word": list(emit.keys()) or [None],
             })
 
-        src = _stage_source(sf, table="documents")
-        docs = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
         # NULL-lang docs excluded symmetrically with the shared
         # oracle (a null group key can't be recounted by the batch
         # join anyway)
@@ -900,17 +893,8 @@ def q_stream_group_topk(spark, sf):
         )
         return out, "update"
 
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "group_topk")
-    if key not in per_session:
-        name = f"stream_gtopk_{hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]}"
-        df, mode = build_stream()
-        q = (df.writeStream.outputMode(mode)
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    name = per_session[key]
+    name = _run_stream(spark, sf, "gtopk", build, one_batch=True,
+                       table="documents")
 
     # last emission per language = the final MG state's candidates
     emitted = spark.table(name)
@@ -997,28 +981,17 @@ def q_stream_benford(spark, sf):
 
     Scale: state is 9 rows regardless of stream length; each
     micro-batch contributes map-side-combined digit partials."""
-    import hashlib
-    import os
-
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "benford")
-    if key not in per_session:
-        name = ("stream_benford_"
-                + hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8])
-        src = _stage_source(sf, table="orders")
-        orders = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
+    def build(orders):
         g = (orders.filter(F.col("o_totalprice") >= 1)
              .select(F.substring(
                  F.floor("o_totalprice").cast("long").cast("string"),
                  1, 1).cast("int").alias("digit"))
              .groupBy("digit").agg(F.count(F.lit(1)).alias("n")))
-        q = (g.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    g = spark.table(per_session[key])
+        return g, "complete"
+
+    name = _run_stream(spark, sf, "benford", build,
+                       one_batch=True, table="orders")
+    g = spark.table(name)
     t = g.agg(F.sum("n").alias("total"))
     exp = F.log10(1.0 + 1.0 / F.col("digit"))
     return (g.crossJoin(F.broadcast(t))
@@ -1060,7 +1033,7 @@ def q_stream_tdigest(spark, sf):
 
     from .incremental import _td_compress, _td_quantile
 
-    def build_stream():
+    def build(ev):
         from pyspark.sql.streaming.state import GroupStateTimeout
 
         def fn(key, pdfs, state):
@@ -1084,9 +1057,6 @@ def q_stream_tdigest(spark, sf):
                 "means": mo, "weights": wo,
             }])
 
-        src = _stage_source(sf, table="events")
-        ev = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
         out = ev.select("event_type", "value").groupBy(
             "event_type").applyInPandasWithState(
             fn,
@@ -1099,19 +1069,8 @@ def q_stream_tdigest(spark, sf):
         )
         return out, "update"
 
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "tdigest")
-    if key not in per_session:
-        name = ("stream_td_"
-                + hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8])
-        df, mode = build_stream()
-        q = (df.writeStream.outputMode(mode)
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    name = per_session[key]
-
+    name = _run_stream(spark, sf, "td", build, one_batch=True,
+                       table="events")
     emitted = spark.table(name)
     final = (
         emitted.withColumn(
@@ -1168,14 +1127,7 @@ def q_stream_quality_gate(spark, sf):
     each micro-batch contributes map-side-combined count partials.
     On a cluster the same plan tails the crawler's Kafka topic and
     the gate feeds the keep/drop router."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "quality_gate")
-    if key not in per_session:
-        name = ("stream_quality_gate_"
-                + hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8])
-        src = _stage_source(sf, table="documents")
-        docs = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
+    def build(docs):
         s = qc_score(docs)
         b = s.select(
             "source", "logit",
@@ -1185,12 +1137,11 @@ def q_stream_quality_gate(spark, sf):
         g = b.groupBy("source", "bucket").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.count(F.when(F.col("logit") > 0, 1)).alias("n_keep"))
-        q = (g.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    return spark.table(per_session[key])
+        return g, "complete"
+
+    name = _run_stream(spark, sf, "quality_gate", build,
+                       one_batch=True, table="documents")
+    return spark.table(name)
 
 
 from .pipeline import TEMP_THR_SQL, temp_thresholds  # noqa: E402
@@ -1231,15 +1182,8 @@ def q_stream_temperature_gate(spark, sf):
     the crawler's Kafka topic; refitting thresholds is a planned
     restart with a new broadcast — state survives because the keyed
     counts don't depend on the threshold values."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "temperature_gate")
-    if key not in per_session:
-        name = ("stream_temp_gate_"
-                + hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8])
+    def build(docs):
         thr = temp_thresholds(load_tables(spark, sf)["documents"])
-        src = _stage_source(sf, table="documents")
-        docs = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
         h = hexpoly_col(F.expr("md5(concat(doc_id, '#temp'))"))
         g = (docs.join(F.broadcast(thr), "lang")
              .select("lang", "threshold",
@@ -1247,12 +1191,11 @@ def q_stream_temperature_gate(spark, sf):
              .groupBy("lang", "threshold")
              .agg(F.count(F.lit(1)).alias("n_seen"),
                   F.count(F.when(F.col("kept"), 1)).alias("n_kept")))
-        q = (g.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    return spark.table(per_session[key])
+        return g, "complete"
+
+    name = _run_stream(spark, sf, "temp_gate", build,
+                       one_batch=True, table="documents")
+    return spark.table(name)
 
 
 #: Shared oracle for the eval-leak ingest gate — composed verbatim
@@ -1300,11 +1243,7 @@ def q_stream_contamination_gate(spark, sf):
     million-gram holdouts the same plan swaps the array for a
     stream-static left-semi join or a bloom filter without touching
     the aggregate. State stays |sources| rows forever."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "contamination_gate")
-    if key not in per_session:
-        name = ("stream_contam_gate_"
-                + hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8])
+    def build(docs):
         d = load_tables(spark, sf)["documents"]
         l = F.split("text", " ")
         gram_expr = F.when(
@@ -1318,9 +1257,6 @@ def q_stream_contamination_gate(spark, sf):
         hold = (d.filter(F.col("doc_id") % 97 == 0)
                 .select(F.explode(gram_expr).alias("gh"))
                 .agg(F.collect_set("gh").alias("hold_ghs")))
-        src = _stage_source(sf, table="documents")
-        docs = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
         flagged = (
             docs.filter(F.col("doc_id") % 97 != 0)
             .select("source", gram_expr.alias("ghs"))
@@ -1330,12 +1266,11 @@ def q_stream_contamination_gate(spark, sf):
         g = flagged.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.count(F.when(F.col("leaked"), 1)).alias("n_leaked"))
-        q = (g.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    return spark.table(per_session[key])
+        return g, "complete"
+
+    name = _run_stream(spark, sf, "contam_gate", build,
+                       one_batch=True, table="documents")
+    return spark.table(name)
 
 
 from .llm import (  # noqa: E402
@@ -1373,23 +1308,15 @@ def q_stream_dedup_incremental(spark, sf):
     stream. On a cluster the same plan tails the crawler's Kafka
     topic, and index maintenance (appending the novel hashes) is the
     batch compaction job, not stream state."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "dedup_incremental")
-    if key not in per_session:
-        name = ("stream_dedup_incr_"
-                + hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8])
+    def build(docs):
         index = dedup_incr_index(
             load_tables(spark, sf)["documents"]).persist()
-        src = _stage_source(sf, table="documents")
-        docs = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
         out = dedup_incr_verdict(dedup_incr_delta(docs), index)
-        q = (out.writeStream.outputMode("append")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    return spark.table(per_session[key])
+        return out, "append"
+
+    name = _run_stream(spark, sf, "dedup_incr", build,
+                       one_batch=True, table="documents")
+    return spark.table(name)
 
 
 from .llm import (  # noqa: E402
@@ -1423,16 +1350,9 @@ def q_stream_dedup_incremental_minhash(spark, sf):
     an empty band array (explode_outer keeps them, they report
     is_near_dup = false). On a cluster the same plan tails the
     crawler topic; the index refresh is the batch compaction job."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "dedup_incremental_minhash")
-    if key not in per_session:
-        name = ("stream_dedup_incr_mh_"
-                + hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8])
+    def build(docs):
         base = minhash_base_index(spark, sf).select(
             F.col("doc_id").alias("match_id"), "band_id", "bh")
-        src = _stage_source(sf, table="documents")
-        docs = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
         delta = (
             docs.filter(F.col("doc_id") % 10 == 0)
             .select("doc_id", "text")
@@ -1450,12 +1370,11 @@ def q_stream_dedup_incremental_minhash(spark, sf):
         hits = banded.join(base, ["band_id", "bh"], "left")
         g = hits.groupBy("doc_id").agg(
             F.collect_set("match_id").alias("matches"))
-        q = (g.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    emitted = spark.table(per_session[key])
+        return g, "complete"
+
+    name = _run_stream(spark, sf, "dedup_incr_mh", build,
+                       one_batch=True, table="documents")
+    emitted = spark.table(name)
     n = F.size("matches")
     return emitted.select(
         "doc_id",
@@ -1493,25 +1412,17 @@ def q_stream_pii_gate(spark, sf):
     q_stream_quality_gate shape exactly. Emission hash-matches the
     batch oracle because the per-row density is exact integer
     arithmetic and the counts are mergeable."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "pii_gate")
-    if key not in per_session:
-        name = ("stream_pii_gate_"
-                + hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8])
-        src = _stage_source(sf, table="documents")
-        docs = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
+    def build(docs):
         p = pii_density(docs)
         g = p.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_seen"),
             F.count(F.when(F.col("density_ppm") <= _PII_TAU, 1))
                 .alias("n_kept"))
-        q = (g.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    return spark.table(per_session[key])
+        return g, "complete"
+
+    name = _run_stream(spark, sf, "pii_gate", build,
+                       one_batch=True, table="documents")
+    return spark.table(name)
 
 
 @query("q_ingest_report", oracle=f"""
@@ -1685,12 +1596,17 @@ def q_stream_checkpoint_resume(spark, sf):
     one state-store version — independent of stream length. The 8x
     restage exists only because the fixture is one file; a real
     ingest is already many files/partitions."""
+    sink, _ = checkpoint_resume_meta(spark, sf)
+    return spark.read.parquet(sink)
+
+
+def checkpoint_resume_meta(spark, sf):
+    """(sink_path, rows_consumed_after_restart) of the memoized
+    q_stream_checkpoint_resume run — the resume-proof test's pin."""
     import shutil
     import time as _t
 
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "ckpt_resume")
-    if key not in per_session:
+    def run():
         digest = hashlib.md5(
             os.path.abspath(sf).encode()).hexdigest()[:8]
         base = os.path.join(tempfile.gettempdir(),
@@ -1733,16 +1649,9 @@ def q_stream_checkpoint_resume(spark, sf):
         resumed = sum(p["numInputRows"] for p in
                       (q2.recentProgress or []))
         q2.stop()
-        per_session[key] = (sink, int(resumed))
-    sink, _ = per_session[key]
-    return spark.read.parquet(sink)
+        return sink, int(resumed)
 
-
-def checkpoint_resume_meta(spark, sf):
-    """(sink_path, rows_consumed_after_restart) for the resume-proof
-    test — populated by q_stream_checkpoint_resume's first run."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    return per_session.get((sf.rstrip("/"), "ckpt_resume"))
+    return memo(spark, sf, ("stream", "ckpt_resume"), run)
 
 
 from .llm import DEDUP_INCR_SEM_ORACLE  # noqa: E402
@@ -1772,12 +1681,7 @@ def q_stream_dedup_incremental_semantic(spark, sf):
     delta-vs-index work as the batch lane, row by row."""
     from .llm import _SEM_TAU, _seminc_parts
 
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "dedup_incremental_semantic")
-    if key not in per_session:
-        name = ("stream_dedup_incr_sem_"
-                + hashlib.md5(os.path.abspath(sf).encode())
-                .hexdigest()[:8])
+    def build(vecs):
         ab, _, cents = _seminc_parts(spark, sf)
         e = load_tables(spark, sf)["embeddings"]
         ed_b = F.transform("embedding",
@@ -1796,9 +1700,6 @@ def q_stream_dedup_incremental_semantic(spark, sf):
                     .persist())
         base_idx.count()
 
-        src = _stage_source(sf, table="embeddings")
-        vecs = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
         delta = (
             vecs.filter(F.col("vec_id") % 10 == 0)
             .select("vec_id", "embedding")
@@ -1835,12 +1736,11 @@ def q_stream_dedup_incremental_semantic(spark, sf):
              .groupBy("vec_id", "cl")
              .agg(F.count(F.lit(1)).cast("long").alias("n_dups"),
                   F.max("cos_sim").alias("max_cos")))
-        q = (g.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    return (spark.table(per_session[key])
+        return g, "complete"
+
+    name = _run_stream(spark, sf, "dedup_incr_sem", build,
+                       one_batch=True, table="embeddings")
+    return (spark.table(name)
             .select("vec_id", F.col("cl").alias("cluster"),
                     "n_dups", "max_cos"))
 
@@ -1901,9 +1801,26 @@ def q_stream_late_data(spark, sf):
     per late row (a watermark comparison ahead of the state
     lookup) — precisely the mechanism that bounds state on an
     infinite stream, here pinned against an exact oracle."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "late_data")
-    if key not in per_session:
+    name, _ = _late_data_run(spark, sf)
+    # update-mode sinks append one row per CHANGED key per batch; the
+    # per-key counts/sums only grow, so last-write-wins == max — and
+    # the straggler batch, having been dropped, changes nothing
+    return (spark.table(name)
+            .groupBy("ws_us", "event_type")
+            .agg(F.max("n").alias("n"),
+                 F.max("sum_value").alias("sum_value")))
+
+
+def late_data_meta(spark, sf):
+    """[(batchId, numInputRows, numRowsDroppedByWatermark), ...]
+    recorded by q_stream_late_data's run — the read-then-dropped
+    accounting for the pytest pin."""
+    return _late_data_run(spark, sf)[1]
+
+
+def _late_data_run(spark, sf):
+    """(sink table, progress accounting) of the memoized replay."""
+    def run():
         digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
         name = f"stream_late_data_{digest}"
         base = os.path.join(tempfile.gettempdir(),
@@ -1948,24 +1865,9 @@ def q_stream_late_data(spark, sf):
                      for o in p.get("stateOperators", [])))
                 for p in (q.recentProgress or [])]
         q.stop()
-        per_session[key] = (name, prog)
-    name, _ = per_session[key]
-    # update-mode sinks append one row per CHANGED key per batch; the
-    # per-key counts/sums only grow, so last-write-wins == max — and
-    # the straggler batch, having been dropped, changes nothing
-    return (spark.table(name)
-            .groupBy("ws_us", "event_type")
-            .agg(F.max("n").alias("n"),
-                 F.max("sum_value").alias("sum_value")))
+        return name, prog
 
-
-def late_data_meta(spark, sf):
-    """[(batchId, numInputRows, numRowsDroppedByWatermark), ...]
-    recorded by q_stream_late_data's run — the read-then-dropped
-    accounting for the pytest pin."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    v = per_session.get((sf.rstrip("/"), "late_data"))
-    return v[1] if v else None
+    return memo(spark, sf, ("stream", "late_data"), run)
 
 
 from .analytics_extra import ANOVA_ORACLE, anova_from_moments  # noqa: E402
@@ -2025,16 +1927,7 @@ def q_stream_srm(spark, sf):
     registry and assignment as the batch twin; live==batch is pinned
     cell-for-cell in pytest (the oracle slot stays with the batch
     key — this key's correctness IS that identity)."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "srm")
-    if key not in per_session:
-        digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
-        name = f"stream_srm_{digest}"
-        src = _stage_source(sf)
-        from ..streaming import _with_event_time, event_stream_schema
-        events = _with_event_time(
-            spark.readStream.schema(
-                event_stream_schema(spark, src)).parquet(src))
+    def build(events):
         aggs = [F.count(F.lit(1)).alias("n")]
         for salt, pct in _SRM_EXPERIMENTS:
             h = hexpoly_col(F.md5(F.concat(
@@ -2043,12 +1936,9 @@ def q_stream_srm(spark, sf):
             aggs.append(F.count(F.when(h < pct, 1))
                         .alias(f"n_a_{salt}"))
         agg = events.dropDuplicates(["user_id"]).agg(*aggs)
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    name = per_session[key]
+        return agg, "complete"
+
+    name = _run_stream(spark, sf, "srm", build, one_batch=True)
     t = spark.table(name)
     rows = []
     for salt, pct in _SRM_EXPERIMENTS:
@@ -2089,16 +1979,7 @@ def q_stream_bootstrap_ci(spark, sf):
     that sink at read time; both twins hash the SAME
     q_bootstrap_ci oracle (composed verbatim via the registry) and
     live==batch is pinned cell-for-cell."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "bootstrap_ci")
-    if key not in per_session:
-        digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
-        name = f"stream_bootstrap_{digest}"
-        src = _stage_source(sf)
-        from ..streaming import _with_event_time, event_stream_schema
-        events = _with_event_time(
-            spark.readStream.schema(
-                event_stream_schema(spark, src)).parquet(src))
+    def build(events):
         vc = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
         d = events.select(
             F.col("event_type").alias("grp"), vc.alias("vc"),
@@ -2114,12 +1995,9 @@ def q_stream_bootstrap_ci(spark, sf):
                .groupBy("grp", "b")
                .agg(F.sum(F.col("w") * F.col("vc")).alias("ws"),
                     F.sum("w").alias("wn")))
-        q = (agg.writeStream.outputMode("complete")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    name = per_session[key]
+        return agg, "complete"
+
+    name = _run_stream(spark, sf, "bootstrap", build, one_batch=True)
     # one aggregate with FILTER lanes — a pt/percentile self-join of
     # the memory sink trips Spark's conflicting-reference resolution
     t = spark.table(name).select(
@@ -2157,16 +2035,7 @@ def q_stream_cuped(spark, sf):
     |users|-row sink at read time. Hashes the SAME q_ab_cuped
     oracle (composed verbatim via the registry); live==batch pinned
     cell-for-cell."""
-    per_session = session_cache(spark, "_engine_stream_cache")
-    key = (sf.rstrip("/"), "cuped")
-    if key not in per_session:
-        digest = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:8]
-        name = f"stream_cuped_{digest}"
-        src = _stage_source(sf)
-        from ..streaming import _with_event_time, event_stream_schema
-        events = _with_event_time(
-            spark.readStream.schema(
-                event_stream_schema(spark, src)).parquet(src))
+    def build(events):
         vc = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
         split = F.expr(_CUPED_SPLIT)
         agg = (events.groupBy("user_id")
@@ -2174,12 +2043,9 @@ def q_stream_cuped(spark, sf):
                           .otherwise(0)).alias("x"),
                     F.sum(F.when(F.col("ts") >= split, vc)
                           .otherwise(0)).alias("y")))
-        q = (agg.writeStream.outputMode("update")
-             .format("memory").queryName(name).start())
-        q.processAllAvailable()
-        q.stop()
-        per_session[key] = name
-    name = per_session[key]
+        return agg, "update"
+
+    name = _run_stream(spark, sf, "cuped", build, one_batch=True)
     # update-mode sink: one row per CHANGED unit per batch; both
     # lanes are nonnegative sums, so the final state is the per-unit
     # max of each lane

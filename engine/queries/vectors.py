@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import load_tables
+from ..io import load_tables, memo
 from ..registry import query
 from .util import prod128, rnd, sql_rnd
 
@@ -250,14 +250,10 @@ def _gram_matrix(spark, sf):
     """Exact integer-scaled Gram matrix collected to the driver —
     d x d = 64 x 64 doubles (the INDEX size of PCA, not the data
     size), computed by the q_embed_gram distributed partial plan and
-    memoized per (session, sf)."""
+    memoized."""
     import numpy as np
 
-    from ..io import session_cache
-
-    cache = session_cache(spark, "_engine_vec_cache")
-    key = (sf.rstrip("/"), "gram")
-    if key not in cache:
+    def build():
         from ..registry import QUERIES
 
         rows = QUERIES["q_embed_gram"](spark, sf).collect()
@@ -266,8 +262,9 @@ def _gram_matrix(spark, sf):
         for r in rows:
             G[r["i"] - 1, r["j"] - 1] = r["g"]
             G[r["j"] - 1, r["i"] - 1] = r["g"]
-        cache[key] = G
-    return cache[key]
+        return G
+
+    return memo(spark, sf, "gram", build)
 
 
 @query("q_embed_pca")  # rows-only: eigendecomposition has no SQL oracle
@@ -347,19 +344,14 @@ def q_embed_whiten(spark, sf):
     import numpy as np
     import pandas as pd
 
-    from ..io import session_cache
-
     G = _gram_matrix(spark, sf)
     # normalize by the NON-NULL row count — the Gram excludes NULL
     # embeddings, so dividing by the raw table count would scale the
     # output covariance by n_total/n_nonnull instead of 1 (memoized
     # beside the gram, same index-sized discipline).
-    cache = session_cache(spark, "_engine_vec_cache")
-    nkey = (sf.rstrip("/"), "gram_n")
-    if nkey not in cache:
-        cache[nkey] = (load_tables(spark, sf)["embeddings"]
-                       .filter(F.col("embedding").isNotNull()).count())
-    n = cache[nkey]
+    n = memo(spark, sf, "gram_n", lambda: (
+        load_tables(spark, sf)["embeddings"]
+        .filter(F.col("embedding").isNotNull()).count()))
     w, V = np.linalg.eigh(G / n)
     w = np.maximum(w, 1e-12)
     flips = np.sign(V[np.abs(V).argmax(axis=0), np.arange(V.shape[1])])
@@ -424,18 +416,16 @@ def _pq_codebook(spark, sf, rot=None, tag: str = ""):
     ``rot``: optional (d, d) orthonormal matrix applied to every
     vector before subspace split — the OPQ fit path (the rotation is
     deterministic, so the artifact digest only needs ``tag``)."""
+    return memo(spark, sf, ("pq_codebook", tag),
+                lambda: _pq_fit_or_load(spark, sf, tag, rot))
+
+
+def _pq_fit_or_load(spark, sf, tag, rot):
     import os
     import shutil
 
     import numpy as np
     import pandas as pd
-
-    from ..io import session_cache
-
-    cache = session_cache(spark, "_engine_pq_cache")
-    ckey = (sf.rstrip("/"), "codebook", tag)
-    if ckey in cache:
-        return cache[ckey]
 
     path = pq_codebook_path(sf, tag)
     if not os.path.exists(path):
@@ -528,7 +518,6 @@ def _pq_codebook(spark, sf, rot=None, tag: str = ""):
     C = np.zeros((PQ_M, PQ_K, sub_d))
     for r in rows:
         C[r["sub"], r["code"]] = np.asarray(r["centroid"])
-    cache[ckey] = C
     return C
 
 
@@ -539,14 +528,10 @@ def _opq_rotation(spark, sf):
     assigned to the PQ_M subspaces in descending-eigenvalue order so
     every subspace carries a balanced share of the variance.  Pure
     driver-side d x d algebra over the already-verified q_embed_gram
-    partials; memoized per (session, sf)."""
+    partials; memoized."""
     import numpy as np
 
-    from ..io import session_cache
-
-    cache = session_cache(spark, "_engine_vec_cache")
-    key = (sf.rstrip("/"), "opq_rot")
-    if key not in cache:
+    def build():
         G = _gram_matrix(spark, sf)
         w, V = np.linalg.eigh(G)
         flips = np.sign(
@@ -559,8 +544,9 @@ def _opq_rotation(spark, sf):
             s = pos if blk % 2 == 0 else PQ_M - 1 - pos
             cols[s].append(int(d_i))
         perm = [d_i for s in range(PQ_M) for d_i in cols[s]]
-        cache[key] = np.ascontiguousarray(V[:, perm])
-    return cache[key]
+        return np.ascontiguousarray(V[:, perm])
+
+    return memo(spark, sf, "opq_rot", build)
 
 
 @query("q_embed_opq")  # rows-only: rotated k-means has no SQL oracle

@@ -62,16 +62,11 @@ def query(name: str, oracle: str | None = None):
 
 
 def load_all() -> None:
-    """Import every query module (idempotent); missing modules are fine
-    while the checklist is still being built out."""
+    """Import every query module (idempotent). A broken import raises:
+    skipping a module would silently drop its keys."""
     global _loaded
     if _loaded:
         return
     for m in _MODULES:
-        try:
-            importlib.import_module(m)
-        except ModuleNotFoundError as e:
-            if e.name and e.name.startswith("engine."):
-                continue
-            raise
+        importlib.import_module(m)
     _loaded = True

@@ -40,6 +40,44 @@ def test_oracle_sql_parses_in_duckdb(duck, key):
     duck.sql(f"EXPLAIN {ORACLE[key]}")
 
 
+def test_load_all_raises_on_a_missing_engine_module(monkeypatch):
+    # a broken import must be loud: skipping the module would drop
+    # its keys from the registry without a sound
+    from engine import registry
+
+    monkeypatch.setattr(registry, "_loaded", False)
+    monkeypatch.setattr(registry, "_MODULES",
+                        ["engine.queries.no_such_module"])
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        load_all()
+
+
+def test_bench_compact_line_fallback_keeps_the_total(monkeypatch):
+    # an over-long timings map forces the drop-fastest fallback; every
+    # dropped key moves into rest, so the line still adds up to value
+    import json
+
+    import bench
+
+    rec = [f"q_recorded_key_{i:03d}" for i in range(150)]
+    monkeypatch.setattr(bench, "RECORDED_KEYS", rec)
+    timings = {k: 0.1 * i for i, k in enumerate(rec)}
+    timings.update({f"q_other_{i}": 0.5 for i in range(20)})
+    out = {"metric": "headline_suite_seconds", "sf": "0.1",
+           "value": round(sum(timings.values()), 3)}
+    line = bench.compact_line(out, timings, None, 2)
+    c = json.loads(line)
+    assert len(line) <= 1900
+    assert c["n_omitted_fastest"] > 0
+    assert c["rest_n"] + len(c["queries"]) == len(timings)
+    # each 1-decimal figure may be off by 0.05
+    tol = 0.05 * (len(c["queries"]) + 1) + 1e-9
+    assert abs(sum(c["queries"].values()) + c["rest_sec"]
+               - c["value"]) <= tol
+    kept = [k for k in rec if k.removeprefix("q_") in c["queries"]]
+    assert kept == rec[-len(kept):]  # the fastest were dropped
+
+
 def test_bench_headline_keys_exist():
     import bench
 

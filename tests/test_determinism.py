@@ -159,9 +159,9 @@ def _fresh_stream_rows(spark, key, parts):
     (q_stream_* keys memoize per (session, sf)) and the pin would
     compare the stream against itself instead of re-executing it
     under the new state-store partitioning."""
-    from engine.io import session_cache
+    from engine.io import memo_drop
 
-    session_cache(spark, "_engine_stream_cache").clear()
+    memo_drop(spark, "stream")
     return _rows(spark, key, parts)
 
 

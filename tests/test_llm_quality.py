@@ -60,7 +60,7 @@ def test_ivf_codebook_persisted_and_reused(spark, sf_dir):
     untouched, no retrain."""
     import os
 
-    from engine.io import session_cache
+    from engine.io import memo_drop
     from engine.queries.llm import ivf_codebook_path
     from engine.registry import QUERIES, load_all
 
@@ -74,7 +74,7 @@ def test_ivf_codebook_persisted_and_reused(spark, sf_dir):
     mtime = os.stat(path).st_mtime_ns
 
     # simulate a fresh session: drop the in-memory codebook cache
-    session_cache(spark, "_engine_ivf_cache").clear()
+    memo_drop(spark, "ivf_codebook")
     again = sorted(tuple(r) for r in
                    QUERIES["q_sim_ivf_topk"](spark, sf_dir).collect())
     assert again == first

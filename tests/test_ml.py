@@ -144,8 +144,8 @@ def test_embed_pq_codes_shape_and_monotonicity(spark, sf_dir):
     path = pq_codebook_path(sf_dir)
     assert os.path.isdir(path)
     mtime = os.stat(path).st_mtime_ns
-    from engine.io import session_cache
-    session_cache(spark, "_engine_pq_cache").clear()
+    from engine.io import memo_drop
+    memo_drop(spark, "pq_codebook")
     again = q_embed_pq(spark, sf_dir).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
     assert os.stat(path).st_mtime_ns == mtime

@@ -169,12 +169,11 @@ def test_dedup_cluster_reliable_checkpoint_path(spark, sf_dir, tmp_path):
     # produce the identical labeling
     import os
 
-    from engine.io import session_cache
+    from engine.io import memo_drop
 
     baseline = {(r.doc_id, r.cluster_id) for r in
                 QUERIES["q_dedup_cluster"](spark, sf_dir).collect()}
-    session_cache(spark, "_engine_cluster_cache").pop(
-        sf_dir.rstrip("/"), None)
+    memo_drop(spark, "cluster")
     ckpt = str(tmp_path / "ckpt")
     spark.sparkContext.setCheckpointDir(ckpt)
     got = {(r.doc_id, r.cluster_id) for r in

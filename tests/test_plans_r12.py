@@ -6,6 +6,7 @@ the last ungraded candidate generator).
 """
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from engine.registry import QUERIES, load_all
@@ -72,14 +73,15 @@ def test_stream_dedup_incremental_is_stateless_append():
     """The stream plan must stay stateless (append mode, no watermark
     or state store): determinism under ANY micro-batch split is the
     correctness argument, and stateless-ness is what guarantees it.
-    Source-inspect the pipeline: the writeStream must be append-mode
-    and the builder must contain no stateful operator calls."""
+    Source-inspect the pipeline: its build function must hand
+    _run_stream append mode, and the key must contain no stateful
+    operator calls."""
     import inspect
 
     from engine.queries import streaming_q
 
     src = inspect.getsource(streaming_q.q_stream_dedup_incremental)
-    assert 'outputMode("append")' in src
+    assert 'return out, "append"' in src
     for stateful in ("withWatermark", "applyInPandasWithState",
                      "dropDuplicates", "groupBy"):
         assert stateful not in src, (
@@ -209,11 +211,12 @@ def test_phash_truth_guard_trips_loudly(spark, sf_dir, monkeypatch):
         QUERIES["q_dedup_eval_phash"](spark, sf_dir)
 
 
-def test_evict_persisted_lru_unpersists_oldest():
-    """The session-cache eviction hook must unpersist and drop the
-    oldest entries, bounding the persisted footprint (round-11
-    ADVICE)."""
-    from engine.io import evict_persisted_lru
+def test_memo_bound_evicts_least_recent_sf_group(spark):
+    """A session keeps at most MEMO_KEEP_SF sf groups: touching one
+    more evicts the least recently used group and unpersists its
+    frames, bare or nested in a tuple/list; sf=None entries are
+    session-wide and never evicted (the round-11 ADVICE bound)."""
+    from engine.io import MEMO_KEEP_SF, memo
 
     class Frame:
         def __init__(self):
@@ -222,11 +225,45 @@ def test_evict_persisted_lru_unpersists_oldest():
         def unpersist(self):
             self.unpersisted = True
 
-    a, b, c = Frame(), Frame(), Frame()
-    cache = {"sf_a": (a,), "sf_b": b, "sf_c": (c, "not-a-frame")}
-    evict_persisted_lru(cache, keep=2)
-    assert list(cache) == ["sf_c"]
-    assert a.unpersisted and b.unpersisted and not c.unpersisted
+    s = spark.newSession()  # its own, empty memo store
+    assert MEMO_KEEP_SF == 3
+    wide, a, b, c = Frame(), Frame(), Frame(), Frame()
+    memo(s, None, "k", lambda: wide)
+    memo(s, "/sf_a/", "k", lambda: (a, "not-a-frame"))
+    memo(s, "/sf_b", "k", lambda: [b])
+    memo(s, "/sf_c", "k", lambda: c)
+    assert memo(s, "/sf_b/", "k", lambda: None) == [b]  # hit, refresh
+    assert not any(f.unpersisted for f in (a, b, c))
+    memo(s, "/sf_d", "k", lambda: "d")  # a 4th sf evicts sf_a
+    assert a.unpersisted
+    assert not (b.unpersisted or c.unpersisted)
+    assert memo(s, "/sf_a", "k", lambda: "rebuilt") == "rebuilt"
+    assert c.unpersisted and not b.unpersisted  # LRU, not insertion
+    assert memo(s, None, "k", lambda: None) is wide
+    assert not wide.unpersisted
+
+
+@pytest.mark.parametrize("key", [
+    "q_tokenizer_apply",      # a persisted frame
+    "q_quantile_bins",        # a Python value (the fitted edges)
+    "q_stream_quality_gate",  # a memory-sink stream table
+    "q_source_text",          # a staged artifact dir
+])
+def test_memo_hit_launches_no_spark_job(spark, sf_dir, key):
+    """The second build of a memoized key in one session is a pure
+    plan build: every fitted or staged side-input comes from the
+    session memo, so no Spark job runs until the frame is acted on."""
+    QUERIES[key](spark, sf_dir)
+    sc = spark.sparkContext
+    group = f"memo_hit_{key}"
+    sc.setJobGroup(group, "second build")
+    try:
+        QUERIES[key](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_pack_schedule_tiling_and_epoch_major_order(spark, sf_dir):
@@ -299,11 +336,11 @@ def test_dedup_incremental_minhash_index_is_persisted(spark, sf_dir):
     """The base band index is the maintained artifact: memoized per
     (session, sf) and persisted, so a second invocation reuses it
     instead of recomputing the corpus signatures."""
-    from engine.io import session_cache
+    from engine.io import memo
 
     QUERIES["q_dedup_incremental_minhash"](spark, sf_dir)
-    cache = session_cache(spark, "_engine_minhash_index_cache")
-    idx = cache[sf_dir.rstrip("/")]
+    idx = memo(spark, sf_dir, "minhash_index",
+               lambda: pytest.fail("base index not memoized"))
     assert idx.storageLevel.useMemory
 
 

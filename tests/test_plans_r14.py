@@ -137,7 +137,7 @@ def test_stream_session_capped_rocksdb_state_store(spark):
     container."""
     from pyspark.sql import functions as F
 
-    from engine.io import session_cache
+    from engine.io import memo_drop
     from engine.queries.streaming_q import _run_stream, \
         _stage_source_time_sliced
     from engine.streaming import capped_sessions_stateful
@@ -160,8 +160,7 @@ def test_stream_session_capped_rocksdb_state_store(spark):
     default = final("sess_capped")
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     old = spark.conf.get(prov_key, None)
-    session_cache(spark, "_engine_stream_cache").pop(
-        (SF.rstrip("/"), "sess_capped_rocks"), None)
+    memo_drop(spark, "stream", "sess_capped_rocks")
     try:
         spark.conf.set(
             prov_key,

@@ -49,11 +49,11 @@ def test_merge_idempotent_replay_is_noop(spark, sf_dir):
     """Double apply == single apply: the committed parquet state IS
     the single-apply result, and the query's output (apply #2 on top)
     must equal it row-for-row."""
-    from engine.io import session_cache
+    from engine.io import memo
 
     out = QUERIES["q_merge_idempotent"](spark, sf_dir)
-    path = session_cache(spark, "_engine_merge_cache")[
-        (sf_dir.rstrip("/"), "idem")]
+    path = memo(spark, sf_dir, "merge_idem",
+                lambda: pytest.fail("merge state not memoized"))
     committed = spark.read.parquet(path).select(
         "c_custkey",
         (F.floor(F.col("bal") * 1e4 + F.lit(0.5)) / 1e4).alias("bal"),

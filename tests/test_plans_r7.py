@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import re
 
-from engine.io import session_cache
+from engine.io import memo, memo_drop
 from engine.registry import QUERIES, load_all
 
 from test_plans import final_plan
@@ -30,32 +30,19 @@ def _containment_optimized(spark, sf_dir, fake_doc_count=None) -> str:
     here: the executed-plan toString garbles nested
     InMemoryRelation/AdaptiveSparkPlan subtrees, dropping the b2
     branch that carries the semi-filter."""
-    cc = session_cache(spark, "_engine_count_cache")
-    key = (sf_dir.rstrip("/"), "documents")
-    old = cc.get(key)
     # drop the memoized persisted frames so a fresh plan is built
     # under the (possibly faked) count
-    memo = session_cache(spark, "_engine_containment_cache")
-
-    def drain():
-        for sh, pairs in list(memo.values()):
-            sh.unpersist()
-            pairs.unpersist()
-        memo.clear()
-
-    drain()
+    memo_drop(spark, "containment")
     if fake_doc_count is not None:
-        cc[key] = fake_doc_count
+        memo_drop(spark, "count", "documents")
+        memo(spark, sf_dir, ("count", "documents"), lambda: fake_doc_count)
     try:
         df = QUERIES["q_dedup_containment"](spark, sf_dir)
         return df._jdf.queryExecution().optimizedPlan().toString()
     finally:
         if fake_doc_count is not None:
-            if old is None:
-                cc.pop(key, None)
-            else:
-                cc[key] = old
-        drain()
+            memo_drop(spark, "count", "documents")
+        memo_drop(spark, "containment")
 
 
 def test_containment_auto_prefilter_switches_on_corpus_size(spark, sf_dir):

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import os
 
-from engine.io import session_cache
+import pytest
+
+from engine.io import memo
 from engine.registry import QUERIES, load_all
 
 load_all()
@@ -22,8 +24,8 @@ def test_text_source_preserves_every_record(spark, sf_dir):
 
 def test_compaction_reduces_file_count(spark, sf_dir):
     QUERIES["q_compaction"](spark, sf_dir).collect()
-    comp = session_cache(spark, "_engine_source_cache")[
-        (sf_dir.rstrip("/"), "compact")]
+    comp = memo(spark, sf_dir, ("source", "compact"),
+                lambda: pytest.fail("compaction dir not memoized"))
     frag = comp.replace("engine_compact_", "engine_frag_")
     n_frag = sum(1 for f in os.listdir(frag) if f.endswith(".parquet"))
     n_comp = sum(1 for f in os.listdir(comp) if f.endswith(".parquet"))
@@ -38,14 +40,14 @@ def test_time_travel_single_version_read_is_repeatable(spark, sf_dir):
     directory."""
     import os
 
-    from engine.io import session_cache
+    from engine.io import memo
     from engine.registry import QUERIES, load_all
 
     load_all()
     audit = {r["version"]: (r["n_rows"], r["total_bal"])
              for r in QUERIES["q_time_travel"](spark, sf_dir).collect()}
-    root = session_cache(spark, "_engine_source_cache")[
-        (sf_dir.rstrip("/"), "timetravel")]
+    root = memo(spark, sf_dir, ("source", "timetravel"),
+                lambda: pytest.fail("time-travel root not memoized"))
     base_n = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
     # v0 and v1 keep every row; v2's deletes are visible only in v2
     assert audit[0][0] == base_n

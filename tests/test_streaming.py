@@ -5,6 +5,8 @@ analogue and (b) a 2-hour-late replayed tail changes nothing.
 """
 import tempfile
 
+import pytest
+
 from engine.streaming import read_event_stream, run_replay, streaming_dedup
 
 
@@ -324,13 +326,13 @@ def test_stream_sink_idempotent_replay_absorbed(spark, sf_dir):
     |events|)."""
     import os
 
-    from engine.io import session_cache
+    from engine.io import memo
     from engine.registry import QUERIES, load_all
 
     load_all()
     QUERIES["q_stream_sink_idempotent"](spark, sf_dir).collect()
-    sink = session_cache(spark, "_engine_stream_cache")[
-        (sf_dir.rstrip("/"), "sink_idem")]
+    sink = memo(spark, sf_dir, ("stream", "sink_idem"),
+                lambda: pytest.fail("sink dir not memoized"))
     entries = os.listdir(sink)
     assert all(e.startswith("batch_id=") for e in entries), entries
     assert not any(e.endswith(".inprogress") for e in entries), entries

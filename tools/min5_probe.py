@@ -8,10 +8,10 @@ machine; the min is the adjudication number BASELINE.md quotes.
 Usage: python tools/min5_probe.py q_pack_schedule_bpe q_mix_schedule_bpe ...
        [-n 5] [--fresh-session-per-run]
 
---fresh-session-per-run restarts the per-session memo caches between
-runs by calling spark.newSession() semantics via cache clearing — it
-measures the COLD lineage cost each run instead of the warm memoized
-read (the distinction the round-14 verdict asks to separate).
+--fresh-session-per-run clears the session memo (engine.io.memo_drop)
+between runs — it measures the COLD lineage cost each run instead of
+the warm memoized read (the distinction the round-14 verdict asks to
+separate). The cached fact tables stay cached.
 """
 from __future__ import annotations
 
@@ -25,24 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
 
-def _clear_session_memos(spark) -> None:
-    """Drop every per-session memo dict attached to the session object
-    (the engine.io.session_cache convention: attributes starting with
-    '_engine_'), unpersisting any cached frames they hold."""
-    for name in [a for a in vars(spark) if a.startswith("_engine_")]:
-        cache = getattr(spark, name)
-        if isinstance(cache, dict):
-            for v in cache.values():
-                stack = list(v) if isinstance(v, (tuple, list)) else [v]
-                for item in stack:
-                    if hasattr(item, "unpersist"):
-                        try:
-                            item.unpersist()
-                        except Exception:
-                            pass
-        delattr(spark, name)
-
-
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("-")]
     n = 5
@@ -53,7 +35,7 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from bench import run_full
-    from engine.io import load_tables
+    from engine.io import load_tables, memo_drop
     from engine.registry import QUERIES, load_all
     from engine.session import get_spark
 
@@ -76,7 +58,7 @@ def main() -> None:
         runs = []
         for _ in range(n):
             if cold:
-                _clear_session_memos(spark)
+                memo_drop(spark)
             t0 = time.time()
             run_full(fn(spark, sf_dir))
             runs.append(round(time.time() - t0, 3))
