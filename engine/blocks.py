@@ -278,23 +278,29 @@ def local_affines_to_field(
     shape=None,
     displacement: bool = True,
 ) -> DataFrame:
-    """R7 (reference local_affine.py:110-139), block path: one task
-    per block, the whole (small) affines array broadcast to every
-    executor — mirroring ``delayed(affines)`` at local_affine.py:124.
-    No inter-block exchange: the stencil reads coordinates, not
-    neighbor data. Output: one row per block, data = C-order
-    (bs0,bs1,bs2,3) float64 displacement/position field; use
-    :func:`field_to_voxels` + a coordinate filter for the R7 crop."""
+    """R7 (reference local_affine.py:110-139), block path: the block
+    ids come from one ``spark.range`` split into
+    ``min(n_blocks, defaultParallelism)`` slices and decoded to
+    ``bx/by/bz``, so the blend is one stage of one Python task per slot
+    with no shuffle; the whole (small) affines array is broadcast to
+    every executor — mirroring ``delayed(affines)`` at
+    local_affine.py:124. No inter-block exchange: the stencil reads
+    coordinates, not neighbor data. Each task yields one frame per
+    block, so it holds one block's field at a time whatever its block
+    count. Output: one row per block, data = C-order (bs0,bs1,bs2,3)
+    float64 displacement/position field; use :func:`field_to_voxels` +
+    a coordinate filter for the R7 crop."""
     bs, o = tuple(blocksize), tuple(overlap)
     g = affines.shape[:3]
     sp = tuple(float(s) for s in spacing)
     bcast = spark.sparkContext.broadcast(np.asarray(affines, dtype=np.float64))
 
-    blocks = (
-        spark.range(g[0]).select(F.col("id").alias("bx"))
-        .crossJoin(spark.range(g[1]).select(F.col("id").alias("by")))
-        .crossJoin(spark.range(g[2]).select(F.col("id").alias("bz")))
-    )
+    n = g[0] * g[1] * g[2]
+    slices = min(n, spark.sparkContext.defaultParallelism)
+    blocks = spark.range(0, n, 1, slices).select(
+        F.expr(f"id div {g[1] * g[2]}").alias("bx"),
+        F.expr(f"(id div {g[2]}) % {g[1]}").alias("by"),
+        F.expr(f"id % {g[2]}").alias("bz"))
     if shape is not None:
         # crop-aware block pruning (the R7 crop, local_affine.py:136):
         # blocks entirely past `shape` are never computed — the
@@ -303,13 +309,10 @@ def local_affines_to_field(
             (F.col("bx") * bs[0] < int(shape[0]))
             & (F.col("by") * bs[1] < int(shape[1]))
             & (F.col("bz") * bs[2] < int(shape[2])))
-    blocks = blocks.repartition(
-        max(32, g[0] * g[1] * g[2] // 4), "bx", "by", "bz")
 
     def fn(batches):
         aff = bcast.value
         for pdf in batches:
-            out = []
             for row in pdf.itertuples(index=False):
                 b = (row.bx, row.by, row.bz)
                 # physical coordinates of this block's voxels
@@ -358,8 +361,8 @@ def local_affines_to_field(
                     wsum[tuple(sl)] += w3
                 # normalized partition-of-unity blend (off-by-one fix)
                 field = acc / wsum[..., None]
-                out.append((*b, field.tobytes()))
-            yield pd.DataFrame(out, columns=["bx", "by", "bz", "data"])
+                yield pd.DataFrame([(*b, field.tobytes())],
+                                   columns=["bx", "by", "bz", "data"])
 
     return blocks.mapInPandas(fn, BLOCK_SCHEMA)
 

@@ -19,12 +19,34 @@ see SURVEY.md §1.4):
 All of these are runtime-settable, so ``configure`` also repairs a
 session created by an external harness (the driver builds its own
 SparkSession and passes it in).
+
+Python workers start from ``engine.pyworker``
+(``spark.python.daemon.module``, found through
+``spark.executorEnv.PYTHONPATH`` = the directory holding the engine
+package). Stock workers import pyspark from the distribution's
+``pyspark.zip`` and py4j zip, with the ``spark-core`` jar also on the
+path, and pyspark's per-task ``importlib.invalidate_caches()`` makes
+Python 3.11 re-read every one of those archive directories (about 6.7k
+entries) in every task: 126-281 ms per task before user code runs. The
+daemon drops the archives and imports the installed pyspark of the same
+version instead. Measured on local[4] (4 cores): 32 trivial
+``mapPartitions`` tasks went from 2.1-2.7 s to 0.59-0.71 s, and the
+``stitch_40`` bench warm pass from a median of 5.21 s to 2.04 s with
+this alone, 1.37 s together with the one-stage affine blend in
+``engine.blocks``. ``configure`` cannot apply this to a session
+someone else built: ``spark.python.daemon.module`` is a static core
+conf read when the context starts, so such a session keeps the stock
+daemon.
 """
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+# numpy reads this once, at its own import; set it before anything here
+# imports numpy (see PY_WORKER_ENV for why).
+os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
+
+from pyspark.sql import SparkSession  # noqa: E402
 
 RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
@@ -97,6 +119,11 @@ PY_WORKER_ENV = {
 }
 
 
+# The directory that holds the engine package, so Python workers find
+# engine.pyworker whatever their working directory.
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(app: str = "engine") -> SparkSession:
     """Build (or fetch) the engine's local session.
 
@@ -105,7 +132,6 @@ def get_spark(app: str = "engine") -> SparkSession:
     default (right for local; on a real cluster AQE coalescing takes
     over).
     """
-    os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -114,6 +140,8 @@ def get_spark(app: str = "engine") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "engine.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
