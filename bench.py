@@ -627,13 +627,14 @@ def compact_line(out: dict, timings: dict, sf1, n_superlinear) -> str:
     """The truncation-proof COMPACT line: only a 2,000-char tail of
     stdout is recorded, so this line alone must carry the full
     suite — compact separators, scalar scale summary instead of the
-    nested per-key probe map. RECORDED_KEYS subset, 1-decimal (fixed
-    membership, zero churn — see the RECORDED_KEYS note; full
-    3-decimal map is in the verbose line). The prefix strip is
-    unconditional (per-key diffs track the stripped names). Keys outside ``queries`` are summed into rest_n/rest_sec,
-    so value == sum(queries) + rest_sec up to the 1-decimal
+    nested per-key probe and sf1 maps (sf1_total stays). RECORDED_KEYS
+    subset, 2-decimal (fixed membership, zero churn — see the
+    RECORDED_KEYS note; full 3-decimal maps are in the verbose line).
+    The prefix strip is unconditional (per-key diffs track the
+    stripped names). Keys outside ``queries`` are summed into
+    rest_n/rest_sec, so value == sum(queries) + rest_sec up to the
     rounding."""
-    rec = {k: round(v, 1) for k, v in timings.items()
+    rec = {k: round(v, 2) for k, v in timings.items()
            if k in set(RECORDED_KEYS)}
     rest = [v for k, v in timings.items() if k not in set(RECORDED_KEYS)]
     compact = {
@@ -647,9 +648,7 @@ def compact_line(out: dict, timings: dict, sf1, n_superlinear) -> str:
         "rest_sec": round(sum(rest), 1),
     }
     if isinstance(sf1, dict) and "queries" in sf1:
-        compact["sf1"] = {k.removeprefix("q_"): round(v, 1)
-                          for k, v in sf1["queries"].items()}
-        compact["sf1_total"] = sf1["total"]
+        compact["sf1_total"] = sf1["total"]  # per key: verbose line
     elif sf1 is not None:
         compact["sf1"] = sf1  # the loud error, never silence
     if n_superlinear is not None:

@@ -17,6 +17,8 @@ Scale design:
 """
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Window as W, functions as F
 
 from ..io import load_tables, memo, spread, table_count
@@ -3325,24 +3327,22 @@ def q_tokenizer_fit(spark, sf):
 
     Scale (the classic BPE fit shape): the ONLY corpus-sized work is
     the first word-frequency aggregate (map-side combinable, one
-    shuffle); every merge round operates on the |word types| table —
-    corpus-size-INDEPENDENT after that first pass, which is why real
-    tokenizer fits run on word counts, not raw text. The type table
-    is persisted once (memoized — the q_basket_rules discipline);
-    each round collects its 1-row argmax (the bounded-
-    side-input discipline — BPE is inherently sequential, the
-    q_cluster_kmeans iterative shape) and feeds the pair back as
-    replace() LITERALS, so round r is ONE pass over the persisted
-    type table with r-1 codegen replaces — total work linear in
-    _BPE_MERGES, where the earlier lazy-union formulation re-executed
-    every prior round per action (the round-9 ADVICE note, now moot
-    at 12 merges). Counts are plain longs (bounded by corpus tokens,
-    no products — the decimal(38,0) rule does not trigger). Integer
-    counts + lexicographic tie-breaks end to end: nothing floats,
-    trivially hash-stable."""
-    return spark.createDataFrame(
-        [(r, p, n) for r, p, n in _bpe_fit_pairs(spark, sf)],
-        "rank long, pair string, n long")
+    shuffle), which stays in Spark and is persisted once (memoized —
+    the q_basket_rules discipline). The fit then collects that
+    |word types| table ONCE and runs the merge rounds on the driver
+    (_bpe_merges): BPE is inherently sequential, and a Spark job per
+    round would pay two AQE jobs to rank a few dozen pairs. Driver
+    work is O(_BPE_MERGES × the summed length of the word types) —
+    corpus-size-INDEPENDENT, which is why real tokenizer fits run on
+    word counts, not raw text. A vocabulary far past driver memory
+    fails loudly at spark.driver.maxResultSize, never silently. A
+    corpus that runs out of adjacent pairs stops early with the
+    merges it learned (the oracle's semantics). Counts are plain
+    longs (bounded by corpus tokens, no products — the decimal(38,0)
+    rule does not trigger). Integer counts + lexicographic tie-breaks
+    end to end: nothing floats, trivially hash-stable."""
+    return spark.createDataFrame(_bpe_fit_pairs(spark, sf),
+                                 "rank long, pair string, n long")
 
 
 def _bpe_type_table(spark, sf):
@@ -3364,31 +3364,49 @@ def _bpe_type_table(spark, sf):
     return memo(spark, sf, "bpe_types", build)
 
 
+def _bpe_literals(pair):
+    """(spaced, fused): the replace() arguments that apply the merge
+    of `pair` ('x y') to a double-space token sequence."""
+    return (" " + pair.replace(" ", "  ") + " ",
+            " " + pair.replace(" ", "") + " ")
+
+
+def _bpe_merges(seqs, n_merges):
+    """Learned BPE merges [(rank, pair, n), ...] over (seq, freq)
+    word-type rows, in memory: per round, count adjacent pairs
+    weighted by freq, take the argmax by (-n, pair) — Spark's and
+    DuckDB's `n DESC, pair ASC`, as UTF-8 byte order equals code-point
+    order — and apply it as the one literal replace proven equal to
+    greedy-left BPE in tests/test_r10_properties.py. Stops early when
+    no adjacent pair is left, as the oracle's chain does."""
+    merges = []
+    for rank in range(1, n_merges + 1):
+        counts = Counter()
+        for seq, freq in seqs:
+            # Spark's trim strips U+0020 only; so must this
+            ts = seq.strip(" ").split("  ")
+            for a, b in zip(ts, ts[1:]):
+                counts[a + " " + b] += freq
+        if not counts:
+            break
+        pair, n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((rank, pair, n))
+        spaced, fused = _bpe_literals(pair)
+        seqs = [(seq.replace(spaced, fused), freq) for seq, freq in seqs]
+    return merges
+
+
 def _bpe_fit_pairs(spark, sf):
-    """Learned BPE merges [(rank, pair, n), ...] — the sequential
-    merge loop shared by q_tokenizer_fit and q_tokenizer_apply,
-    memoized so the lifecycle runs the fit once."""
+    """Learned BPE merges [(rank, pair, n), ...] shared by every
+    tokenizer key, memoized so the lifecycle runs the fit once. One
+    Spark job collects the persisted word-type table; the sequential
+    merge rounds then run on the driver in _bpe_merges, over
+    vocabulary-sized rows — a Spark job per round would rank a few
+    dozen pairs at the price of two AQE jobs."""
     def build():
-        s = _bpe_type_table(spark, sf)
-        pairs = []
-        for rank in range(1, _BPE_MERGES + 1):
-            ts = F.split(F.trim(F.col("seq")), "  ")
-            pair_expr = F.transform(
-                F.sequence(F.lit(1), F.size(ts) - 1),
-                lambda i: F.concat(F.element_at(ts, i), F.lit(" "),
-                                   F.element_at(ts, i + 1)))
-            b = (s.filter(F.size(ts) >= 2)
-                 .select(F.explode(pair_expr).alias("pair"), "freq")
-                 .groupBy("pair").agg(F.sum("freq").alias("n"))
-                 .orderBy(F.col("n").desc(), "pair").limit(1)
-                 .collect())[0]
-            pairs.append((rank, b["pair"], int(b["n"])))
-            spaced = " " + b["pair"].replace(" ", "  ") + " "
-            fused = " " + b["pair"].replace(" ", "") + " "
-            s = s.select(F.replace(
-                F.col("seq"), F.lit(spaced), F.lit(fused)).alias("seq"),
-                "freq")
-        return pairs
+        rows = _bpe_type_table(spark, sf).collect()
+        return _bpe_merges([(r["seq"], r["freq"]) for r in rows],
+                           _BPE_MERGES)
 
     return memo(spark, sf, "bpe_merges", build)
 
@@ -3457,10 +3475,10 @@ def q_tokenizer_apply(spark, sf):
     side-input; at 100 TB this is the per-doc token-count table a
     pipeline materializes to storage once per tokenizer version."""
     def build():
-        # the learned merges come from the shared memoized fit loop,
-        # as replace() literals — the fit lineage executes once per
-        # session (round-9 ADVICE; now load-bearing at 12 merges)
-        pairs = {r: p for r, p, _ in _bpe_fit_pairs(spark, sf)}
+        # the learned merges come from the shared memoized fit as
+        # replace() literals: its one collect runs once per session,
+        # and a fit that stopped early just applies fewer merges
+        pairs = _bpe_fit_pairs(spark, sf)
         d = load_tables(spark, sf)["documents"]
         dw = (d.select("doc_id",
                        F.explode(F.split("text", " ")).alias("word"))
@@ -3470,11 +3488,9 @@ def q_tokenizer_apply(spark, sf):
             F.concat(F.lit(" "),
                      F.trim(F.regexp_replace("word", "(.)", "$1  ")),
                      F.lit(" ")).alias("seq"))
-        for r in range(1, _BPE_MERGES + 1):
-            spaced = " " + pairs[r].replace(" ", "  ") + " "
-            fused = " " + pairs[r].replace(" ", "") + " "
+        for _, p, _ in pairs:
             s = s.select("word", F.replace(
-                F.col("seq"), F.lit(spaced), F.lit(fused)).alias("seq"))
+                F.col("seq"), *map(F.lit, _bpe_literals(p))).alias("seq"))
         nt = s.select(
             "word",
             F.size(F.split(F.trim("seq"), "  ")).cast("long")
@@ -3545,8 +3561,7 @@ def q_tokenizer_vocab(spark, sf):
     # replaces, one narrow pass) to count final-token occurrences
     seq = F.col("seq")
     for r, p, _ in pairs:
-        seq = F.replace(seq, F.lit(" " + p.replace(" ", "  ") + " "),
-                        F.lit(" " + p.replace(" ", "") + " "))
+        seq = F.replace(seq, *map(F.lit, _bpe_literals(p)))
     occ = (s.select(F.explode(F.split(F.trim(seq), "  ")).alias("token"),
                     "freq")
            .groupBy("token").agg(F.sum("freq").cast("long").alias("n")))
@@ -3609,8 +3624,10 @@ def q_tokenizer_eval(spark, sf):
     the BPE fit shape), cumulative replaces shared along the chain;
     the k=0 baseline total is a collected 1-row literal side-input
     (the q_token_budget lazy-total lesson: a crossJoin against the
-    lazy aggregate would re-execute the type lineage per row)."""
-    pairs = {r: p for r, p, _ in _bpe_fit_pairs(spark, sf)}
+    lazy aggregate would re-execute the type lineage per row). A fit
+    that ran out of adjacent pairs before _BPE_MERGES yields rows only
+    for the budgets it reached."""
+    pairs = _bpe_fit_pairs(spark, sf)
     cur = _bpe_type_table(spark, sf)
     ts = F.split(F.trim(F.col("seq")), "  ")
 
@@ -3622,27 +3639,21 @@ def q_tokenizer_eval(spark, sf):
             F.sum(F.col("freq") * F.size(ts)).cast("long")
              .alias("n_tokens"))
 
-    out, base_tokens = None, None
-    for k in range(0, _BPE_MERGES + 1):
-        if k > 0:
-            spaced = " " + pairs[k].replace(" ", "  ") + " "
-            fused = " " + pairs[k].replace(" ", "") + " "
-            cur = cur.select(F.replace(
-                F.col("seq"), F.lit(spaced), F.lit(fused)).alias("seq"),
-                "freq")
-        if k not in _BPE_EVAL_GRID:
-            continue
-        row = totals(cur, k)
-        if k == 0:
-            base_tokens = int(row.collect()[0]["n_tokens"])
-            row = totals(_bpe_type_table(spark, sf), 0)
-        out = row if out is None else out.unionByName(row)
+    out = totals(cur, 0)
+    base_tokens = out.collect()[0]["n_tokens"]  # NULL: no word types
+    for k, p, _ in pairs:
+        cur = cur.select(F.replace(
+            F.col("seq"), *map(F.lit, _bpe_literals(p))).alias("seq"),
+            "freq")
+        if k in _BPE_EVAL_GRID:
+            out = out.unionByName(totals(cur, k))
+    base = "NULL" if base_tokens is None else base_tokens
     return out.select(
         "n_merges", "n_word_types", "n_words", "n_tokens",
         rnd(F.col("n_tokens") / F.col("n_words").cast("double"), 6)
         .alias("tokens_per_word"),
         F.expr(f"CAST(CAST(n_tokens AS DECIMAL(38,0)) * 1000000"
-               f" div {base_tokens} AS BIGINT)")
+               f" div {base} AS BIGINT)")
         .alias("compression_ppm"))
 
 

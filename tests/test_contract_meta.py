@@ -70,12 +70,36 @@ def test_bench_compact_line_fallback_keeps_the_total(monkeypatch):
     assert len(line) <= 1900
     assert c["n_omitted_fastest"] > 0
     assert c["rest_n"] + len(c["queries"]) == len(timings)
-    # each 1-decimal figure may be off by 0.05
+    # each figure (2-decimal keys, 1-decimal rest) may be off by 0.05
     tol = 0.05 * (len(c["queries"]) + 1) + 1e-9
     assert abs(sum(c["queries"].values()) + c["rest_sec"]
                - c["value"]) <= tol
     kept = [k for k in rec if k.removeprefix("q_") in c["queries"]]
     assert kept == rec[-len(kept):]  # the fastest were dropped
+
+
+@pytest.mark.parametrize("t, headroom", [(9.99, 100), (99.99, 0)])
+def test_bench_compact_line_fits_every_recorded_key(t, headroom):
+    # the real key lists, every recorded key at t seconds with two
+    # decimals and a full sf1 lane: the line keeps every recorded key
+    # with room to spare for keys appended to RECORDED_KEYS later
+    import json
+
+    import bench
+
+    timings = {k: t for k in bench.RECORDED_KEYS}
+    timings.update({k: 0.5 for k in bench.HEADLINE if k not in timings})
+    sf1 = {"queries": {k: 12.345 for k in bench.SF1_KEYS},
+           "total": 123.456}
+    out = {"metric": "headline_suite_seconds", "sf": "0.1",
+           "value": round(sum(timings.values()), 3)}
+    line = bench.compact_line(out, timings, sf1, 0)
+    c = json.loads(line)
+    assert len(line) <= 1900 - headroom
+    assert "n_omitted_fastest" not in c
+    assert len(c["queries"]) == len(bench.RECORDED_KEYS)
+    assert set(c["queries"].values()) == {t}
+    assert c["sf1_total"] == 123.456 and "sf1" not in c
 
 
 def test_bench_headline_keys_exist():

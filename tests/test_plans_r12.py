@@ -266,6 +266,27 @@ def test_memo_hit_launches_no_spark_job(spark, sf_dir, key):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def test_cold_bpe_fit_launches_one_spark_job(spark, sf_dir):
+    """Over a materialized word-type table, a cold BPE fit is one
+    Spark job: the collect of that table. The merge rounds run on the
+    driver, not as two AQE jobs per round."""
+    from engine.io import memo_drop
+    from engine.queries.llm import _bpe_fit_pairs, _bpe_type_table
+
+    _bpe_type_table(spark, sf_dir).count()
+    memo_drop(spark, "bpe_merges")
+    sc = spark.sparkContext
+    group = "cold_bpe_fit"
+    sc.setJobGroup(group, "cold fit")
+    try:
+        _bpe_fit_pairs(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_pack_schedule_tiling_and_epoch_major_order(spark, sf_dir):
     """The epoch-aware packing must (a) reconcile row-for-row with
     q_mix_schedule (same docs, same epochs — packing adds tiling, it
