@@ -81,31 +81,16 @@ def weight_blocks(df: DataFrame, blocksize, overlap, grid,
     bs, o, g = tuple(blocksize), tuple(overlap), tuple(grid)
     ext = tuple(bs[a] + 2 * o[a] for a in range(3))
     tail = (ncomp,) if ncomp > 1 else ()
+    weight = _weight_fn(bs, o, g, ncomp)
 
     def fn(batches):
-        # The trapezoid depends on a block index only through "is this
-        # the first / last block of the axis", so cache per boundary
-        # class (≤27 entries) rather than per block — a per-block key
-        # grows without bound within a task at large grids.
-        cache: dict[tuple, np.ndarray] = {}
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 b = (row.bx, row.by, row.bz)
-                key = tuple((b[a] == 0, b[a] == g[a] - 1) for a in range(3))
-                if key not in cache:
-                    w = (
-                        axis_weights(row.bx, g[0], bs[0], o[0])[:, None, None]
-                        * axis_weights(row.by, g[1], bs[1], o[1])[None, :, None]
-                        * axis_weights(row.bz, g[2], bs[2], o[2])[None, None, :]
-                    )
-                    if tail:  # broadcast over the component axis
-                        w = w[..., None]
-                    cache[key] = w
                 arr = np.frombuffer(row.data, dtype=np.float64).reshape(
                     ext + tail)
-                out.append((row.bx, row.by, row.bz,
-                            (arr * cache[key]).tobytes()))
+                out.append((*b, weight(arr, b).tobytes()))
             yield pd.DataFrame(out, columns=["bx", "by", "bz", "data"])
 
     return df.mapInPandas(fn, BLOCK_SCHEMA)

@@ -41,11 +41,13 @@ daemon.
 from __future__ import annotations
 
 import os
+import warnings
 
 # numpy reads this once, at its own import; set it before anything here
 # imports numpy (see PY_WORKER_ENV for why).
 os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
 
+from pyspark.errors import AnalysisException  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 RUNTIME_CONFS = {
@@ -79,13 +81,27 @@ RUNTIME_CONFS = {
 }
 
 
+# The error conditions of a conf that a running session cannot change:
+# a core conf read when the context started, or a static SQL conf.
+_FIXED_CONF_CONDITIONS = {"CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"}
+
+
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable engine configs to an existing session."""
+    """Apply the runtime-settable engine configs to an existing session.
+
+    A conf the session fixed when it was built is skipped, and one
+    warning names every such conf; any other error raises."""
+    refused = []
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable in this deployment; builder-time config required
+        except AnalysisException as e:
+            if e.getCondition() not in _FIXED_CONF_CONDITIONS:
+                raise
+            refused.append(k)
+    if refused:
+        warnings.warn("the session refused engine confs fixed when it was "
+                      f"built: {', '.join(refused)}", stacklevel=2)
     return spark
 
 
@@ -128,9 +144,9 @@ def get_spark(app: str = "engine") -> SparkSession:
     """Build (or fetch) the engine's local session.
 
     local[N] is a single-JVM stand-in for a multi-executor cluster;
-    shuffle partitions are sized to the core count, not the 200
-    default (right for local; on a real cluster AQE coalescing takes
-    over).
+    shuffle partitions are a fixed 32, not the 200 default, whatever
+    the core count (AQE starts shuffles at ``initialPartitionNum`` and
+    coalesces them, but stateful streaming operators keep this count).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (

@@ -20,11 +20,23 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import run_full  # noqa: E402  (the shared full-compute action)
+from bench import time_runs, timed_pass, warm_up  # noqa: E402
+
+# Min-of-N rules (bench.time_runs): min-of-2, third pass inside each
+# scale's own noise band. The growth RATIO divides base into x10, so a
+# GC tail on EITHER side distorts the flagged factor. The base side
+# gets a third pass below 1 s (±50% band — BASELINE.md drift note;
+# round-8 change); the 10x side below 10 s (same ±20% band scaled by
+# the data — the round-9 q_corpus_curate 10.45x flag was a min-of-2
+# x10-side tail: 7.42 s vs 6.18 s min-of-3, now re-timed with
+# tools/probe.py at the x10 fixture). Re-measure before you flag.
+BASE_RULE = (2, 1.0)
+X10_RULE = (2, 10.0)
+X100_RULE = (2, None)
+SWEEP_TABLES = ("documents", "embeddings", "lineitem", "orders")
 
 OUT = "/tmp/engine_scale_x10"
 BASE = "/root/testdata/sf0.1"
@@ -394,86 +406,86 @@ REL_KEYS = [
 ]
 
 
+def _replicate(df, dst: str, parts: int, shifts: dict, tweak=None) -> None:
+    """Write ten copies of ``df`` to ``dst`` as ``parts`` files. Copy
+    i adds ``i * shift`` to each ``shifts`` column (so keys stay
+    unique) and, if given, passes through ``tweak(copy, i)``."""
+    from pyspark.sql import functions as F
+
+    def copy(i):
+        c = df
+        for col, shift in shifts.items():
+            c = c.withColumn(col, (F.col(col) + i * shift).cast("long"))
+        return tweak(c, i) if tweak else c
+
+    big = copy(0)
+    for i in range(1, 10):
+        big = big.union(copy(i))
+    if os.path.islink(dst):  # an older fixture symlinked this table
+        os.unlink(dst)
+    big.repartition(parts).write.mode("overwrite").parquet(dst)
+
+
+def _replicate_documents(spark, src: str, dst: str, parts: int,
+                         tag: str) -> None:
+    """Ten copies of documents with remapped ids; copy i > 0 appends
+    ``f" {tag}{i}"`` to the text, so the copies are near-duplicates,
+    not exact ones."""
+    from pyspark.sql import functions as F
+
+    d = spark.read.parquet(f"{src}/documents.parquet")
+    _replicate(
+        d, f"{dst}/documents.parquet", parts, {"doc_id": d.count()},
+        lambda c, i: c.withColumn(
+            "text", F.when(F.lit(i) == 0, F.col("text"))
+            .otherwise(F.concat(F.col("text"), F.lit(f" {tag}{i}")))))
+
+
+def _replicate_relational(spark, src: str, dst: str, parts: int) -> None:
+    """Ten copies of lineitem/orders (order keys shifted) and events.
+    Events remap event ids AND user ids, so the user↔event_type graph
+    (q_pagerank) and per-user series grow 10× rather than densifying
+    the same users."""
+    from pyspark.sql import functions as F
+
+    li = spark.read.parquet(f"{src}/lineitem.parquet")
+    o = spark.read.parquet(f"{src}/orders.parquet")
+    shift = o.agg(F.max("o_orderkey")).collect()[0][0] + 1
+    _replicate(li, f"{dst}/lineitem.parquet", parts, {"l_orderkey": shift})
+    _replicate(o, f"{dst}/orders.parquet", parts, {"o_orderkey": shift})
+    ev = spark.read.parquet(f"{src}/events.parquet")
+    ne = ev.agg(F.max("event_id")).collect()[0][0] + 1
+    nu = ev.agg(F.max("user_id")).collect()[0][0] + 1
+    _replicate(ev, f"{dst}/events.parquet", parts,
+               {"event_id": ne, "user_id": nu})
+
+
+def _link_rest(src: str, dst: str, tables) -> None:
+    for t in tables:
+        if not os.path.lexists(f"{dst}/{t}.parquet"):
+            os.symlink(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
+
+
 def build(spark) -> None:
     from pyspark.sql import functions as F
 
-    d = spark.read.parquet(f"{BASE}/documents.parquet")
-    n = d.count()
-    parts = [
-        d.withColumn("doc_id", (F.col("doc_id") + i * n).cast("long"))
-        .withColumn("text", F.when(F.lit(i) == 0, F.col("text"))
-                    .otherwise(F.concat(F.col("text"), F.lit(f" v{i}"))))
-        for i in range(10)
-    ]
-    big = parts[0]
-    for c in parts[1:]:
-        big = big.union(c)
-    big.repartition(32).write.mode("overwrite") \
-        .parquet(f"{OUT}/documents.parquet")
-
+    _replicate_documents(spark, BASE, OUT, 32, "v")
     e = spark.read.parquet(f"{BASE}/embeddings.parquet")
-    m = e.count()
     # perturb replicated embeddings (mirrors the text ' v{i}' tweak):
     # verbatim copies would give a degenerate distribution of exact
     # duplicate vectors, skewing LSH/IVF bucket occupancy at 10×
-    eparts = [
-        e.withColumn("vec_id", (F.col("vec_id") + i * m).cast("long"))
-        .withColumn(
-            "embedding",
-            F.col("embedding") if i == 0 else F.transform(
+    _replicate(
+        e, f"{OUT}/embeddings.parquet", 32, {"vec_id": e.count()},
+        lambda c, i: c if i == 0 else c.withColumn(
+            "embedding", F.transform(
                 "embedding",
                 lambda x, j: (x + 0.01 * F.lit(float(i))
                               * F.sin((j + 1).cast("double")
-                                      * F.lit(float(i)))).cast("float"),
-            ),
-        )
-        for i in range(10)
-    ]
-    bige = eparts[0]
-    for c in eparts[1:]:
-        bige = bige.union(c)
-    bige.repartition(32).write.mode("overwrite") \
-        .parquet(f"{OUT}/embeddings.parquet")
-
-    li = spark.read.parquet(f"{BASE}/lineitem.parquet")
-    o = spark.read.parquet(f"{BASE}/orders.parquet")
-    shift = o.agg(F.max("o_orderkey")).collect()[0][0] + 1
-    for name, df, kcol in (("lineitem", li, "l_orderkey"),
-                           ("orders", o, "o_orderkey")):
-        ps = [df.withColumn(kcol, (F.col(kcol) + i * shift).cast("long"))
-              for i in range(10)]
-        bigr = ps[0]
-        for c in ps[1:]:
-            bigr = bigr.union(c)
-        dst = f"{OUT}/{name}.parquet"
-        if os.path.islink(dst):
-            os.unlink(dst)
-        bigr.repartition(32).write.mode("overwrite").parquet(dst)
-
-    # events: replicate with remapped event ids AND user ids so the
-    # user↔event_type graph (q_pagerank) and per-user series grow 10×
-    # rather than densifying the same users
-    ev = spark.read.parquet(f"{BASE}/events.parquet")
-    ne = ev.agg(F.max("event_id")).collect()[0][0] + 1
-    nu = ev.agg(F.max("user_id")).collect()[0][0] + 1
-    evp = [
-        ev.withColumn("event_id", (F.col("event_id") + i * ne).cast("long"))
-        .withColumn("user_id", (F.col("user_id") + i * nu).cast("long"))
-        for i in range(10)
-    ]
-    bige2 = evp[0]
-    for c in evp[1:]:
-        bige2 = bige2.union(c)
-    dst = f"{OUT}/events.parquet"
-    if os.path.islink(dst):
-        os.unlink(dst)
-    bige2.repartition(32).write.mode("overwrite").parquet(dst)
-
+                                      * F.lit(float(i)))).cast("float"))))
+    _replicate_relational(spark, BASE, OUT, 32)
     # remaining driver tables: symlink the sf0.1 originals
-    for t in ("region", "nation", "customer", "supplier", "part"):
-        dst = f"{OUT}/{t}.parquet"
-        if not os.path.exists(dst):
-            os.symlink(f"{BASE}/{t}.parquet", dst)
+    _link_rest(BASE, OUT, ("region", "nation", "customer", "supplier",
+                           "part"))
 
 
 OUT100 = "/tmp/engine_scale_x100"
@@ -588,27 +600,11 @@ X100_KEYS = [
 def build_x100(spark) -> None:
     """100× documents (500k rows) from the 10× fixture; every other
     table symlinks the 10× build (document-driven keys only)."""
-    from pyspark.sql import functions as F
-
-    d = spark.read.parquet(f"{OUT}/documents.parquet")
-    n = d.count()
-    parts = [
-        d.withColumn("doc_id", (F.col("doc_id") + i * n).cast("long"))
-        .withColumn("text", F.when(F.lit(i) == 0, F.col("text"))
-                    .otherwise(F.concat(F.col("text"), F.lit(f" w{i}"))))
-        for i in range(10)
-    ]
-    big = parts[0]
-    for c in parts[1:]:
-        big = big.union(c)
     os.makedirs(OUT100, exist_ok=True)
-    big.repartition(64).write.mode("overwrite") \
-        .parquet(f"{OUT100}/documents.parquet")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "events", "lineitem", "orders", "embeddings"):
-        dst = f"{OUT100}/{t}.parquet"
-        if not os.path.lexists(dst):
-            os.symlink(f"{OUT}/{t}.parquet", dst)
+    _replicate_documents(spark, OUT, OUT100, 64, "w")
+    _link_rest(OUT, OUT100, ("region", "nation", "customer", "supplier",
+                             "part", "events", "lineitem", "orders",
+                             "embeddings"))
 
 
 def _validated_only(universe, what: str) -> list[str]:
@@ -624,34 +620,31 @@ def _validated_only(universe, what: str) -> list[str]:
     return only
 
 
+def _sweep(spark, sf: str, keys, rule, tag: str | None = None) -> dict:
+    """Each key's min-of-N seconds at ``sf``, 2 decimals; with ``tag``,
+    also print each key's figure as it lands."""
+    row = {}
+    for k in keys:
+        row[k] = round(min(time_runs(timed_pass(spark, sf, k), *rule)), 2)
+        if tag:
+            print(json.dumps({"key": k, f"{tag}_sec": row[k]}), flush=True)
+    return row
+
+
 def run_x100(spark) -> None:
-    import time as _t
-
-    from engine.io import load_tables
-    from engine.registry import QUERIES
-
     if not os.path.exists(f"{OUT100}/documents.parquet"):
         build_x100(spark)
-    t = load_tables(spark, OUT100)
-    t["documents"].cache().count()
-    row = {}
+    t = warm_up(spark, OUT100, ("documents",))
     only = _validated_only(X100_KEYS, "X100_KEYS")
-    for k in [k for k in X100_KEYS if not only or k in only]:
-        best = None
-        for _ in range(2):
-            t0 = _t.time()
-            run_full(QUERIES[k](spark, OUT100))
-            dt = _t.time() - t0
-            best = dt if best is None else min(best, dt)
-        row[k] = round(best, 2)
-        print(json.dumps({"key": k, "x100_sec": row[k]}), flush=True)
+    row = _sweep(spark, OUT100,
+                 [k for k in X100_KEYS if not only or k in only],
+                 X100_RULE, "x100")
     t["documents"].unpersist()
     print(json.dumps({"scale": "x100", "seconds": row}), flush=True)
 
 
 def main() -> None:
-    from engine.io import load_tables
-    from engine.registry import QUERIES, load_all
+    from engine.registry import load_all
     from engine.session import get_spark
 
     spark = get_spark("scale_probe")
@@ -676,32 +669,10 @@ def main() -> None:
                   if not only or k in only]
     rows: dict[str, dict[str, float]] = {}
     for sf in ("/root/testdata/sf0.01", BASE, OUT):
-        t = load_tables(spark, sf)
-        for name in ("documents", "embeddings", "lineitem", "orders"):
-            t[name].cache().count()
-        row = {}
-        for k in probe_keys:
-            # min-of-2, third pass inside each scale's own noise
-            # band: the growth RATIO divides base into x10, so a GC
-            # tail on EITHER side distorts the flagged factor. The
-            # base side gets a third pass below 1 s (±50% band —
-            # BASELINE.md drift note; round-8 change); the 10x side
-            # below 10 s (same ±20% band scaled by the data — the
-            # round-9 q_corpus_curate 10.45x flag was a min-of-2
-            # x10-side tail: 7.42 s vs 6.18 s min-of-3 in
-            # tools/curate_stage_timing.py). Re-measure before you
-            # flag.
-            third_under = 10.0 if sf == OUT else 1.0
-            best = None
-            runs = 0
-            while runs < 2 or (runs < 3 and best < third_under):
-                t0 = time.time()
-                run_full(QUERIES[k](spark, sf))
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-                runs += 1
-            row[k] = round(best, 2)
-        for name in ("documents", "embeddings", "lineitem", "orders"):
+        t = warm_up(spark, sf, SWEEP_TABLES)
+        row = _sweep(spark, sf, probe_keys,
+                     X10_RULE if sf == OUT else BASE_RULE)
+        for name in SWEEP_TABLES:
             t[name].unpersist()
         label = sf.rstrip("/").rsplit("/", 1)[-1]
         rows[label] = row
@@ -726,8 +697,8 @@ _QUADRATIC_BY_DESIGN = {"q_sim_topk"}
 # per-stage tool pinned every stage at 6.99-9.66x), so a
 # zero-tolerance >10.0 flag flips forever on exactly-linear keys.
 # Keys above 10.0 but within the tolerance are reported LOUDLY in
-# "linear_band_keys" (never hidden); tools/curate_stage_timing.py is
-# the arbiter for anything that lingers there.
+# "linear_band_keys" (never hidden); re-time anything that lingers
+# there with tools/probe.py at both fixtures.
 _SUPERLINEAR_FACTOR = 12.0
 
 
@@ -883,44 +854,12 @@ REL100_KEYS = [
 
 def build_x100rel(spark) -> None:
     """100x lineitem/orders/events (60M / 15M / 10M rows) from the
-    10x fixture. Events replicate with remapped event AND user ids
-    (the 10x build discipline) so per-user series and the A/B
-    assignment space grow 100x rather than densifying."""
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(f"{OUT}/lineitem.parquet")
-    o = spark.read.parquet(f"{OUT}/orders.parquet")
-    shift = o.agg(F.max("o_orderkey")).collect()[0][0] + 1
+    10x fixture, with the 10x build's key remapping. A pre-round-14
+    fixture symlinked the 10x events; _replicate replaces the link."""
     os.makedirs(OUTREL, exist_ok=True)
-    for name, df, kcol in (("lineitem", li, "l_orderkey"),
-                           ("orders", o, "o_orderkey")):
-        ps = [df.withColumn(kcol, (F.col(kcol) + i * shift).cast("long"))
-              for i in range(10)]
-        big = ps[0]
-        for c in ps[1:]:
-            big = big.union(c)
-        big.repartition(64).write.mode("overwrite") \
-            .parquet(f"{OUTREL}/{name}.parquet")
-    ev = spark.read.parquet(f"{OUT}/events.parquet")
-    ne = ev.agg(F.max("event_id")).collect()[0][0] + 1
-    nu = ev.agg(F.max("user_id")).collect()[0][0] + 1
-    evp = [
-        ev.withColumn("event_id", (F.col("event_id") + i * ne).cast("long"))
-        .withColumn("user_id", (F.col("user_id") + i * nu).cast("long"))
-        for i in range(10)
-    ]
-    bigev = evp[0]
-    for c in evp[1:]:
-        bigev = bigev.union(c)
-    dst = f"{OUTREL}/events.parquet"
-    if os.path.islink(dst):  # pre-round-14 fixture symlinked 10x events
-        os.unlink(dst)
-    bigev.repartition(64).write.mode("overwrite").parquet(dst)
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "documents", "embeddings"):
-        dst = f"{OUTREL}/{t}.parquet"
-        if not os.path.lexists(dst):
-            os.symlink(f"{OUT}/{t}.parquet", dst)
+    _replicate_relational(spark, OUT, OUTREL, 64)
+    _link_rest(OUT, OUTREL, ("region", "nation", "customer", "supplier",
+                             "part", "documents", "embeddings"))
     # completion marker, written LAST: a crashed prior build that
     # already unlinked the events symlink but wrote only a partial
     # events table must not pass the rebuild gate and skew every
@@ -931,29 +870,16 @@ def build_x100rel(spark) -> None:
 
 
 def run_x100rel(spark) -> None:
-    import time as _t
-
-    from engine.io import load_tables
-    from engine.registry import QUERIES
-
     if (not os.path.exists(f"{OUTREL}/lineitem.parquet")
             or not os.path.exists(f"{OUTREL}/_BUILD_COMPLETE")):
         build_x100rel(spark)
-    t = load_tables(spark, OUTREL)
-    for name in ("lineitem", "orders", "events"):
-        t[name].cache().count()
-    row = {}
+    tables = ("lineitem", "orders", "events")
+    t = warm_up(spark, OUTREL, tables)
     only = _validated_only(REL100_KEYS, "REL100_KEYS")
-    for k in [k for k in REL100_KEYS if not only or k in only]:
-        best = None
-        for _ in range(2):
-            t0 = _t.time()
-            run_full(QUERIES[k](spark, OUTREL))
-            dt = _t.time() - t0
-            best = dt if best is None else min(best, dt)
-        row[k] = round(best, 2)
-        print(json.dumps({"key": k, "x100rel_sec": row[k]}), flush=True)
-    for name in ("lineitem", "orders", "events"):
+    row = _sweep(spark, OUTREL,
+                 [k for k in REL100_KEYS if not only or k in only],
+                 X100_RULE, "x100rel")
+    for name in tables:
         t[name].unpersist()
     print(json.dumps({"scale": "x100rel", "seconds": row}), flush=True)
 

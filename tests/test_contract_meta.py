@@ -8,6 +8,9 @@ No SparkSession needed — this file runs in milliseconds-to-seconds.
 """
 from __future__ import annotations
 
+import importlib.util
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -16,6 +19,7 @@ from engine.registry import ORACLE, QUERIES, load_all
 load_all()
 
 SF = "/root/testdata/sf0.001"
+TOOLS = sorted((Path(__file__).resolve().parent.parent / "tools").glob("*.py"))
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -130,3 +134,11 @@ def test_scale_probe_keys_exist():
                 scale_probe.X100_KEYS, scale_probe.REL100_KEYS):
         missing = [k for k in lst if k not in QUERIES]
         assert not missing, missing
+
+
+@pytest.mark.parametrize("path", TOOLS, ids=lambda p: p.name)
+def test_tool_imports(path):
+    # a tool's main is __main__-guarded, so importing runs nothing; an
+    # engine or bench rename that breaks a tool's imports fails here
+    spec = importlib.util.spec_from_file_location(f"tool_{path.stem}", path)
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
