@@ -413,7 +413,8 @@ RECORDED_KEYS = [
 
 DEFAULT_SF = "/root/testdata/sf0.1"
 FACT_TABLES = ("lineitem", "orders", "events", "documents", "embeddings")
-SF1_TABLES = ("lineitem", "orders", "documents", "embeddings")
+# the tables of the 10x-fixture lanes (bench sf1, scale_probe sweeps)
+SWEEP_TABLES = ("documents", "embeddings", "lineitem", "orders")
 
 # Min-of-N rules, as (n, third_under) for time_runs.
 #
@@ -445,20 +446,16 @@ def run_full(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def time_runs(fn, n: int, third_under: float | None = None, before=None,
-              clock=time.perf_counter) -> list[float]:
+def time_runs(fn, n: int, third_under: float | None = None) -> list[float]:
     """Run ``fn()`` ``n`` times and return the seconds of each run,
     plus one more run when the best of the ``n`` is under
-    ``third_under`` seconds. ``before()``, if given, runs untimed
-    ahead of every run. Callers report ``min`` of the result."""
+    ``third_under`` seconds. Callers report ``min`` of the result."""
     runs: list[float] = []
     while len(runs) < n or (third_under is not None and len(runs) == n
                             and min(runs) < third_under):
-        if before is not None:
-            before()
-        t0 = clock()
+        t0 = time.perf_counter()
         fn()
-        runs.append(clock() - t0)
+        runs.append(time.perf_counter() - t0)
     return runs
 
 
@@ -608,11 +605,11 @@ def main() -> None:
         import scale_probe
         if not os.path.exists(f"{scale_probe.OUT}/documents.parquet"):
             scale_probe.build(spark)
-        t1 = warm_up(spark, scale_probe.OUT, SF1_TABLES)
+        t1 = warm_up(spark, scale_probe.OUT, SWEEP_TABLES)
         sf1_timings = {key: round(min(time_runs(
             timed_pass(spark, scale_probe.OUT, key), *SF1_RULE)), 3)
             for key in SF1_KEYS}
-        for name in SF1_TABLES:
+        for name in SWEEP_TABLES:
             t1[name].unpersist()
         sf1 = {"queries": sf1_timings,
                "total": round(sum(sf1_timings.values()), 3)}

@@ -23,7 +23,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import time_runs, timed_pass, warm_up  # noqa: E402
+from bench import SWEEP_TABLES, time_runs, timed_pass, warm_up  # noqa: E402
 
 # Min-of-N rules (bench.time_runs): min-of-2, third pass inside each
 # scale's own noise band. The growth RATIO divides base into x10, so a
@@ -36,7 +36,6 @@ from bench import time_runs, timed_pass, warm_up  # noqa: E402
 BASE_RULE = (2, 1.0)
 X10_RULE = (2, 10.0)
 X100_RULE = (2, None)
-SWEEP_TABLES = ("documents", "embeddings", "lineitem", "orders")
 
 OUT = "/tmp/engine_scale_x10"
 BASE = "/root/testdata/sf0.1"

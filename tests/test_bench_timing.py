@@ -10,8 +10,7 @@ import scale_probe
 
 class FakeRuns:
     """A callable whose n-th call takes ``durations[n]`` seconds on its
-    own clock; ``before`` hooks take a second each, which a correct
-    timer leaves out."""
+    own clock, which the test puts in place of ``time.perf_counter``."""
 
     def __init__(self, durations):
         self.durations = list(durations)
@@ -24,9 +23,6 @@ class FakeRuns:
     def __call__(self) -> None:
         self.now += self.durations[self.calls]
         self.calls += 1
-
-    def before(self) -> None:
-        self.now += 1.0
 
 
 @pytest.mark.parametrize("rule, durations, n_runs", [
@@ -45,14 +41,16 @@ class FakeRuns:
     (scale_probe.X10_RULE, [12.0, 9.9, 1.0], 3),
     (scale_probe.X10_RULE, [10.0, 12.0, 1.0], 2),
 ])
-def test_min_of_n_rules(rule, durations, n_runs):
+def test_min_of_n_rules(monkeypatch, rule, durations, n_runs):
     fake = FakeRuns(durations)
-    runs = bench.time_runs(fake, *rule, before=fake.before, clock=fake.clock)
+    monkeypatch.setattr(bench.time, "perf_counter", fake.clock)
+    runs = bench.time_runs(fake, *rule)
     assert runs == pytest.approx(durations[:n_runs])
     assert fake.calls == n_runs
 
 
-def test_the_third_run_only_follows_n_runs():
+def test_the_third_run_only_follows_n_runs(monkeypatch):
     # the threshold adds at most one run, even when every run is fast
     fake = FakeRuns([0.01] * 5)
-    assert len(bench.time_runs(fake, 1, 0.5, clock=fake.clock)) == 2
+    monkeypatch.setattr(bench.time, "perf_counter", fake.clock)
+    assert len(bench.time_runs(fake, 1, 0.5)) == 2

@@ -94,13 +94,12 @@ def probe(spark, key: str, run, n: int, cold: bool, arms: dict) -> dict:
             run()
     for i in range(n):
         for arm, set_arm in arms.items():
-            def before():
-                set_arm()
-                if cold:
-                    io.memo_drop(spark)
-                group[arm] = f"probe:{key}:{arm}:{i}"
-                sc.setJobGroup(group[arm], key)
-            runs[arm] += time_runs(run, 1, before=before)
+            set_arm()
+            if cold:
+                io.memo_drop(spark)
+            group[arm] = f"probe:{key}:{arm}:{i}"
+            sc.setJobGroup(group[arm], key)
+            runs[arm] += time_runs(run, 1)
     return {arm: {"runs": [round(t, 3) for t in r],
                   "min": round(min(r), 3),
                   "median": round(statistics.median(r), 3),
