@@ -19,333 +19,52 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
-# Keys already driver-verified green in CORRECTNESS_r02.json (47 hash-green +
-# 2 rows-only-by-design).  The driver's correctness gate covers the first 50
-# keys in dict order per round, so driver-verified keys rotate toward the
-# BACK of the dict and keys without a driver row yet fill the front of the
-# window.  Round 4: the ~27 window slots left over after the 23 waiting keys
-# are filled by the OLDEST r2 greens (this list, in order) so they get
-# re-confirmed against silent drift since round 2.
-_R02_GREEN = [
-    "q_scan_project", "q_scan_count_all", "q_source_range",
-    "q_sink_roundtrip", "q_filter_pred", "q_project_compute",
-    "q_sample_hash", "q_join_inner", "q_join_broadcast", "q_join_left",
-    "q_join_full", "q_join_semi", "q_join_anti", "q_join_cross",
-    "q_join_theta_range", "q_join_asof", "q_join_interval",
-    "q_join_bucketed", "q_agg_pricing_summary", "q_agg_having",
-    "q_agg_approx_distinct", "q_agg_rollup", "q_agg_cube",
-    "q_agg_grouping_sets", "q_agg_stats", "q_window_rank",
-    "q_window_lag_lead", "q_window_frame_rows", "q_window_frame_range",
-    "q_window_analytic", "q_window_running_total", "q_topk_orders",
-    "q_limit_offset", "q_union_all", "q_union_distinct", "q_intersect",
-    "q_except", "q_pivot", "q_unpivot", "q_subquery_scalar",
-    "q_subquery_exists", "q_subquery_in", "q_cte_chain", "q_null_handling",
-    "q_string_funcs", "q_date_funcs", "q_math_funcs", "q_conditional",
-    "q_cast_types",
-]
-
-
-# Keys with a driver row in CORRECTNESS_r03.json (48 hash-green + 2
-# rows-only-by-design).  These rotate to the very back of the dict —
-# they are the most recently confirmed, so they wait the longest for
-# re-confirmation slots.
-_R03_GREEN = [
-    "q_agg_distinct", "q_array_funcs", "q_explode_unnest",
-    "q_map_funcs", "q_json_funcs", "q_array_setops",
-    "q_struct_funcs", "q_sequence_dates", "q_regexp_funcs",
-    "q_agg_bool", "q_first_last_ignorenulls", "q_bitwise_ops",
-    "q_string_agg", "q_percentile_disc", "q_window_tumbling",
-    "q_window_sliding", "q_window_session", "q_event_dedup_first",
-    "q_dedup_exact", "q_dedup_fuzzy_minhash", "q_dedup_simhash",
-    "q_dedup_ngram_jaccard", "q_sim_topk", "q_dedup_embed_cosine",
-    "q_sim_lsh_topk", "q_knn_centroid", "q_text_tokens",
-    "q_text_stats", "q_tfidf_top", "q_text_langid",
-    "q_text_quality", "q_text_fingerprint", "q_sim_ivf_topk",
-    "q_text_tokens_regex", "q_multimodal_meta", "q_multimodal_frames",
-    "q_grid_gen", "q_affine_field", "q_block_weights",
-    "q_stitch_1d", "q_stitch_3d", "q_stitch_3d_blocks",
-    "q_halo_sum", "q_local_affine_blend", "q_local_affine_blend_blocks",
-    "q_udf_scalar", "q_udaf_weighted_mean", "q_udtf_expand",
-    "q_dedup_cluster", "q_dedup_resolve",
-]
-
 
 def _driver_green() -> dict[str, int]:
     """key → latest round with a PASSING driver CORRECTNESS row
     (hash-green, or a completed rows-only check for no-oracle keys),
     read from the driver's own CORRECTNESS_r*.json artifacts. A key
     whose most recent driver row FAILED is treated as having no row
-    at all, so it rotates back to the front of the window."""
+    at all, so it rotates back to the front of the window. An artifact
+    that does not parse raises: skipping it would silently send its
+    keys back to the front."""
     import glob
     import json
     import re
 
     here = os.path.dirname(os.path.abspath(__file__))
-    latest: dict[str, int] = {}
-    status: dict[str, bool] = {}
+    latest: dict[str, tuple[int, bool]] = {}  # key → (round, passed)
     for p in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
         m = re.search(r"_r(\d+)\.json$", p)
-        if not m:
+        if not m:  # e.g. a per-core-count variant such as *_r15_c8.json
             continue
         rnd = int(m.group(1))
-        try:
-            with open(p) as f:
-                data = json.load(f)
-        except Exception:
-            continue
-        if not isinstance(data, dict):
-            continue
+        with open(p) as f:
+            data = json.load(f)
         for k, v in data.items():
-            if not isinstance(v, dict):
-                continue
             ok = (v.get("hash_match") is True
                   or (v.get("err") == "no_oracle"
                       and v.get("spark_rows") is not None))
-            if rnd >= latest.get(k, 0):
-                latest[k] = rnd
-                status[k] = ok
-    return {k: r for k, r in latest.items() if status.get(k)}
-
-
-# Keys first registered in round 5. The waiting tier orders
-# waited-longest-first, and driver artifacts cannot date a key that
-# has never had a row — so round-5 newcomers are explicitly demoted
-# behind keys that have been waiting since round 3/4 (which would
-# otherwise be queue-jumped by a newcomer registered in an
-# early-loading module, e.g. q_table_checksum in scans.py).
-_R05_NEW = {
-    "q_profile_columns", "q_dq_audit", "q_linreg_group",
-    "q_feature_scale", "q_embed_meanpool", "q_source_text",
-    "q_compaction", "q_mjoin_topk", "q_event_transitions",
-    "q_quantile_bins", "q_union_evolution", "q_hll_rollup",
-    "q_sample_weighted", "q_join_time_range", "q_multimodal_audio",
-    "q_fuzzy_match", "q_interval_union", "q_table_checksum",
-    "q_group_sample_k", "q_graph_bfs", "q_session_capped",
-}
-
-# Keys first registered in round 5's BUILD phase (after the r05
-# rotation plan was fixed): demoted behind even the _R05_NEW tier so
-# they never displace keys that have been waiting longer.
-_R06_NEW = {
-    "q_merge_idempotent", "q_cdc_apply", "q_text_entropy",
-    "q_embed_gram", "q_stream_interval_union",
-    "q_ts_ohlc", "q_variant_funcs", "q_source_python_ds",
-    "q_stream_ohlc", "q_embed_pca", "q_stream_cdc_compact",
-    "q_time_travel", "q_agg_mode", "q_stream_sink_idempotent",
-    "q_embed_whiten",
-}
-
-# Keys first registered in round 6's BUILD phase: the newest cohort,
-# demoted behind every earlier tier so round-6 newcomers never
-# queue-jump keys that have been waiting since earlier rounds.
-_R06B_NEW = {
-    "q_group_topk_sketch", "q_stitch_3d_vec_blocks",
-    "q_vocab_coverage", "q_dedup_incremental", "q_embed_pq",
-    "q_stream_group_topk", "q_sim_ivfpq_topk", "q_bm25_score",
-    "q_k_anonymity", "q_text_perplexity", "q_basket_rules",
-    "q_attribution", "q_dedup_containment", "q_robust_stats",
-    "q_weighted_quantile", "q_ts_autocorr",
-}
-
-# Keys first registered in round 7. In round 7 this cohort was
-# demoted behind EVERY green key so the stale r2-era greens could be
-# re-confirmed first (round-6 verdict). That drain completed in
-# CORRECTNESS_r07 (0 fails), so per the round-7 verdict's top
-# priority these 13 now lead the round-8 window as the NEWEST
-# waiting cohort — nothing is registered ahead of them.
-_R07_NEW = {
-    "q_ivf_refresh", "q_tdigest_quantile", "q_contamination_chunk",
-    "q_dsir_weight", "q_dedup_substring", "q_spearman_corr",
-    "q_ts_ewma", "q_l_diversity", "q_stream_tdigest",
-    "q_pack_sequences", "q_winsorize",
-    "q_bitmap_rollup", "q_mjoin_volume",
-}
-
-# Keys first registered in round 6's final wave: demoted behind every
-# earlier cohort (same discipline as _R05_NEW/_R06_NEW/_R06B_NEW).
-_R06C_NEW = {
-    "q_dedup_paragraph", "q_zipf_fit", "q_skyline",
-    "q_ab_welch", "q_ts_seasonal",
-    "q_feature_hash", "q_gini", "q_conversion_lag",
-    "q_time_weighted_avg", "q_stream_ab_welch",
-    "q_chi2_independence", "q_benford", "q_ks_test",
-    "q_pct_change", "q_embed_opq",
-    "q_user_growth", "q_mann_whitney", "q_mutual_info",
-    "q_rfm_segment", "q_stream_benford",
-}
-
-# Keys first registered in round 8. In round 8 this cohort was
-# demoted behind EVERY green key so the _R07_NEW drain could take
-# the window first. That drain completed in CORRECTNESS_r08 (all 13
-# earned green first rows, 0 fails), so per the round-8 verdict's
-# top priority these 9 now LEAD the round-9 window as the NEWEST
-# waiting cohort — nothing is registered ahead of them.
-_R08_NEW: set[str] = {
-    "q_stitch_user_fn", "q_dedup_semantic", "q_dedup_url",
-    "q_quality_classifier", "q_stream_quality_gate", "q_rag_retrieve",
-    "q_sample_temperature", "q_dp_count", "q_dedup_eval",
-}
-
-# Keys first registered in round 9. In round 9 this cohort was
-# demoted behind EVERY green key so the _R08_NEW drain could take
-# the window first. That drain completed in CORRECTNESS_r09 (all 9
-# earned green first rows, 0 fails), so per the round-9 verdict's
-# top priority these 10 now LEAD the round-10 window as the NEWEST
-# waiting cohort — nothing is registered ahead of them.
-_R09_NEW: set[str] = {
-    "q_contamination_semantic", "q_stream_temperature_gate",
-    "q_dedup_eval_semantic", "q_tokenizer_fit", "q_tokenizer_apply",
-    "q_stream_contamination_gate", "q_dp_sum", "q_rank_fusion",
-    "q_dedup_phash", "q_dedup_report",
-}
-
-# Keys first registered in round 10. In round 10 this cohort was
-# demoted behind EVERY green key so the _R09_NEW drain could take
-# the window first. That drain completed in CORRECTNESS_r10 (all 10
-# earned green first rows, 0 fails), so per the round-10 verdict's
-# top priority these 11 now LEAD the round-11 window as the NEWEST
-# waiting cohort — nothing is registered ahead of them.
-_R10_NEW: set[str] = {
-    "q_dedup_substring_cut", "q_dedup_eval_phash", "q_tokenizer_vocab",
-    "q_token_budget", "q_dedup_eval_bands", "q_contamination_cut",
-    "q_quality_ablation", "q_pack_efficiency", "q_dedup_cross_source",
-    "q_sim_eval_ivf", "q_contamination_report",
-}
-
-# Keys first registered in round 11. Round 11 was a rotation-only
-# micro-round — no keys were registered, so this cohort is empty and
-# its tiered() slot (folded in at round-12 start, the same discipline
-# _R07_NEW.._R10_NEW got) is trivially vacant.
-_R11_NEW: set[str] = set()
-
-# Keys first registered in round 12. In round 12 this cohort was
-# demoted behind EVERY green key so the staleness drain could take
-# the window first. That drain completed in CORRECTNESS_r12 (46
-# green + 4 rows-only-by-design, 0 fails), so per the round-12
-# verdict's top priority these 31 now LEAD the round-13 window as
-# the NEWEST waiting cohort — nothing is registered ahead of them.
-_R12_NEW: set[str] = {
-    "q_sim_eval_lsh", "q_stream_dedup_incremental", "q_mix_schedule",
-    "q_pack_schedule", "q_dedup_incremental_minhash", "q_langid_eval",
-    "q_tokenizer_eval", "q_stream_dedup_incremental_minhash",
-    "q_sim_eval_ivfpq", "q_ingest_report", "q_dp_histogram",
-    "q_mix_curriculum", "q_dedup_eval_simhash", "q_shuffle_shards",
-    "q_interleave_sources", "q_pack_mask_spans", "q_embed_dim_stats",
-    "q_embed_outlier_vecs", "q_file_skipping_stats",
-    "q_minhash_calibration", "q_contamination_bloom_eval",
-    "q_pii_report", "q_stream_pii_gate",
-    "q_shuffle_epoch", "q_span_corruption_mask", "q_pack_shuffled",
-    "q_quality_drift", "q_batch_by_length", "q_stream_quality_drift",
-    "q_sim_eval_truncated", "q_sim_eval_quantized",
-}
-
-# Keys first registered in round 13. In round 13 this cohort was
-# demoted behind EVERY green key so the _R12_NEW drain could take
-# the window first. That drain completed in CORRECTNESS_r13 (48
-# green + 2 rows-only-by-design, 0 fails; all 31 _R12_NEW keys got
-# first rows), so per the round-13 verdict's top priority these 41
-# now LEAD the round-14 window as the NEWEST waiting cohort —
-# nothing is registered ahead of them. At 41 keys they fill all but
-# ~9 of the 50-slot window; the spare slots re-confirm the stalest
-# greens (r7-era keys).
-_R13_NEW: set[str] = {
-    "q_token_budget_bpe", "q_dp_quantile", "q_contamination_bloom",
-    "q_join_skew_report", "q_incr_join_refresh", "q_data_card",
-    "q_stream_incr_join_refresh", "q_dp_report",
-    "q_ts_rolling_median", "q_stream_checkpoint_resume",
-    "q_dedup_incremental_semantic", "q_stream_dedup_incremental_semantic",
-    "q_embed_centroid_drift", "q_mix_schedule_bpe",
-    "q_pack_schedule_bpe", "q_pack_unit_ablation",
-    "q_join_asof_tolerance", "q_source_json_corrupt",
-    "q_join_asof_forward", "q_join_asof_nearest",
-    "q_anova", "q_langid_calibration", "q_decile_lift",
-    "q_source_csv_corrupt", "q_ts_lag_features",
-    "q_stream_late_data",
-    "q_sample_balanced", "q_kruskal_wallis", "q_levene_test",
-    "q_window_rolling_distinct", "q_ts_changepoint", "q_stream_anova",
-    "q_bootstrap_ci", "q_dp_topk",
-    "q_survival_km", "q_ab_srm",
-    "q_ab_power", "q_stream_srm",
-    "q_ab_cuped", "q_stream_bootstrap_ci",
-    "q_stream_cuped",
-}
-
-# Keys first registered in round 14 (the one exception to the
-# round-14 growth pause: the arbitrary-stateful sessionization twin
-# completes the lifecycle of the operator round 14 itself added for
-# VERDICT item 3). Drained in CORRECTNESS_r14 (green first row), so
-# as of round 15 the cohort is folded into the ordinary tiers like
-# its predecessors — with zero never-rowed keys left in the
-# registry, the window is pure stalest-first re-confirmation.
-_R14_NEW: set[str] = {"q_stream_session_capped"}
+            if rnd >= latest.get(k, (0, False))[0]:
+                latest[k] = (rnd, ok)
+    return {k: r for k, (r, ok) in latest.items() if ok}
 
 
 def _rotated(keys, green=None) -> list[str]:
-    """Waiting-longest-first key order over the FULL registry.
+    """Keys without a passing CORRECTNESS row first, in registry order,
+    then green keys by (latest green round, registry index).
 
-    NORMATIVE round-N procedure (the per-round maintenance contract;
-    everything else in this function is derived automatically from
-    the driver's own CORRECTNESS_r*.json artifacts):
-
-    1. **Fold-in at round start.** When round N-1's verdict confirms
-       the previous waiting cohort drained (all its keys earned green
-       driver rows), the newest cohort `_R{N-1}_NEW` simply rejoins
-       the waiting tiers below — no code change needed beyond adding
-       its set to `cohorts` when it is first declared. If a round
-       registers NEW keys mid-round, declare `_R{N}_NEW`, append it
-       LAST in `cohorts`, and (only while the previous drain is still
-       pending) pre-filter it behind the greens as rounds 12/13 did.
-       As of round 14 no pre-filter is active: every registered key
-       competes in the ordinary tiers.
-    2. **Ordering.** Three groups, concatenated:
-       (a) keys with NO passing driver row, oldest registration
-           cohort first (pre-round-5 keys, then _R05_NEW, …, in
-           declaration order of `cohorts`), registry order within a
-           cohort — so the longest-waiting key is always first;
-       (b) driver-green keys sorted by (latest green round,
-           registry index) — provably oldest-green-first, with the
-           registry index making ties within a round deterministic
-           and independent of dict iteration accidents;
-       (c) nothing else — the ordering is total over the registry, so
-           a key can never be silently dropped (round-11 ADVICE).
-       A key whose LATEST driver row failed has no green entry and
-       rotates back into group (a).
-    3. **Window arithmetic.** The driver checks the FIRST ~50 keys of
-       this ordering per round. At len(registry) keys (342 as of
-       round 15 — state the figure from the registry, not this
-       docstring, if they ever disagree) and 50 slots/round, a green
-       key is re-confirmed every ceil(len(registry)/50) ≈ 7 rounds; a
-       round that registers K new keys delays the re-confirmation
-       tail by K slots. Keep new-key registration ≤ the window size
-       so a cohort always drains in one round.
-
-    `green` is injectable for unit tests (tests/test_rotation.py);
-    production callers omit it and the driver artifacts are read."""
-    def tiered(waiting):
-        # Newer cohorts demote behind older waiting keys. _R13_NEW
-        # folded into the ordinary tiers at round-14 start (the usual
-        # fold-in): its 41 never-rowed keys now lead the window as
-        # the newest waiting cohort, nothing registered ahead of them.
-        cohorts = (_R05_NEW, _R06_NEW, _R06B_NEW, _R06C_NEW, _R07_NEW,
-                   _R08_NEW, _R09_NEW, _R10_NEW, _R11_NEW, _R12_NEW,
-                   _R13_NEW, _R14_NEW)
-        older = [k for k in waiting
-                 if not any(k in c for c in cohorts)]
-        return older + sum(([k for k in waiting if k in c]
-                            for c in cohorts), [])
-
+    The correctness gate checks only the first ~50 keys of this order
+    per round, so unchecked keys lead and the stalest greens are
+    re-confirmed next. With no artifacts this is registry order.
+    `green` is injectable for unit tests; callers omit it and the
+    CORRECTNESS_r*.json artifacts are read."""
     if green is None:
         green = _driver_green()
-    if not green:  # artifacts missing (fresh checkout): static fallback
-        r2, r3 = set(_R02_GREEN), set(_R03_GREEN)
-        waiting = tiered([k for k in keys if k not in r2 and k not in r3])
-        return (waiting + [k for k in keys if k in r2]
-                + [k for k in keys if k in r3])
-    idx = {k: i for i, k in enumerate(keys)}  # registry tie-break
-    waiting = tiered([k for k in keys if k not in green])
-    seen = sorted((k for k in keys if k in green),
-                  key=lambda k: (green[k], idx[k]))
-    return waiting + seen
+    idx = {k: i for i, k in enumerate(keys)}
+    return ([k for k in keys if k not in green]
+            + sorted((k for k in keys if k in green),
+                     key=lambda k: (green[k], idx[k])))
 
 
 def entry(spark: SparkSession) -> DataFrame:

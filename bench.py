@@ -352,7 +352,7 @@ HEADLINE = [
 
 # Fixed sf1-scale lane (round-15 verdict item 6): ten standing keys
 # measured every round at the 10x fixture (/tmp/engine_scale_x10 —
-# 500k docs / 6M lineitem, the sf1 equivalent; built from sf0.1 by
+# 50k docs / 6M lineitem, the sf1 equivalent; built from sf0.1 by
 # scale_probe.build if absent). Absolute regime drift vs genuine
 # growth used to be disentangled by ad-hoc adjudication paragraphs;
 # a standing sf1 block in every BENCH_r{N} makes it mechanical: a

@@ -28,10 +28,9 @@ _MODULES = [
     "engine.queries.multimodal",
     "engine.queries.stitch",
     "engine.queries.udfs",
-    # registered last on purpose: new keys slot in AFTER the existing
-    # driver-unverified keys in the correctness-window rotation
-    # (__spark_entry__._rotated), so keys that already waited a round
-    # get their driver row first.
+    # registry order is the order in which keys without a CORRECTNESS row
+    # are checked (__spark_entry__._rotated), so keys registered in
+    # the modules below queue behind those registered above.
     "engine.queries.pipeline",
     "engine.queries.sources",
     "engine.queries.analytics_extra",

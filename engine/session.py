@@ -140,6 +140,14 @@ PY_WORKER_ENV = {
 ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def default_driver_memory() -> str:
+    """A quarter of physical memory in whole GB, clamped to 2g..24g, so
+    two engine sessions on one host (tests beside check.py) stay within
+    RAM. SPARK_GRAFT_DRIVER_MEM overrides it."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(24, max(2, total // 4 // 2**30))}g"
+
+
 def get_spark(app: str = "engine") -> SparkSession:
     """Build (or fetch) the engine's local session.
 
@@ -154,7 +162,8 @@ def get_spark(app: str = "engine") -> SparkSession:
         .appName(app)
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.daemon.module", "engine.pyworker")
         .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)

@@ -2,8 +2,8 @@
 PARSE in DuckDB against the real tables (catches SQL typos and
 engine-dialect slips at test time instead of in the driver's
 correctness gate), and every auxiliary key list (bench HEADLINE,
-rotation cohorts, probe lists) must reference keys that actually
-exist in the registry (catches renames silently orphaning a list).
+probe lists) must reference keys that actually exist in the
+registry (catches renames silently orphaning a list).
 No SparkSession needed — this file runs in milliseconds-to-seconds.
 """
 from __future__ import annotations
@@ -111,20 +111,6 @@ def test_bench_headline_keys_exist():
 
     missing = [k for k in bench.HEADLINE if k not in QUERIES]
     assert not missing, missing
-
-
-def test_rotation_cohorts_reference_real_keys():
-    # Discover cohorts by naming convention rather than a hand-kept
-    # tuple, so a future _R0NX_NEW cohort can't be silently omitted
-    # from the staleness check (the r6 _R06C_NEW omission).
-    import __spark_entry__ as entry
-
-    cohorts = [getattr(entry, name) for name in dir(entry)
-               if name.endswith(("_GREEN", "_NEW"))]
-    assert len(cohorts) >= 6, "cohort discovery broke"
-    for cohort in cohorts:
-        stale = [k for k in cohort if k not in QUERIES]
-        assert not stale, stale
 
 
 def test_scale_probe_keys_exist():

@@ -1,4 +1,4 @@
-"""Round-10 plan pins + behavior tests for the _R10_NEW cohort:
+"""Round-10 plan pins + behavior tests for keys first registered in round 10:
 q_dedup_substring_cut (substring-dedup removal — the Lee et al. 2022
 transformation over the measurement twin's duplicated-gram islands).
 """

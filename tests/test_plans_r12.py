@@ -1,4 +1,4 @@
-"""Round-12 behavior pins for the _R12_NEW cohort:
+"""Round-12 behavior pins for keys first registered in round 12:
 
 q_sim_eval_lsh — the SRP-LSH bucket-width recall curve graded against
 the exact brute-force truth (the q_sim_eval_ivf template applied to

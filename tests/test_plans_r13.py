@@ -1,4 +1,4 @@
-"""Round-13 behavior pins for the _R13_NEW cohort:
+"""Round-13 behavior pins for keys first registered in round 13:
 
 q_token_budget_bpe — the data-mix planner re-based on tokenizer
 tokens (verdict r12 item 4: budget in the unit the loader packs);

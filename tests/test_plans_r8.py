@@ -1,4 +1,4 @@
-"""Round-8 plan pins + behavior tests for the _R08_NEW cohort:
+"""Round-8 plan pins + behavior tests for keys first registered in round 8:
 q_stitch_user_fn (map_overlap user-fn lifecycle), q_dedup_semantic
 (SemDeDup), q_dedup_url (canonicalization dedup, + the canon_url
 decoration-collapse property), q_quality_classifier (literal-weights

@@ -1,4 +1,4 @@
-"""Round-9 plan pins + behavior tests for the _R09_NEW cohort:
+"""Round-9 plan pins + behavior tests for keys first registered in round 9:
 q_contamination_semantic (broadcast-holdout GEMM eval-leak detector),
 q_stream_temperature_gate (speed-layer twin of the alpha-sampling
 gate), q_dedup_eval_semantic (semantic-path precision/recall vs

@@ -1,9 +1,8 @@
 """Unit tests for the driver-window rotation ordering in
-__spark_entry__._rotated (round-13 VERDICT item 5).
+__spark_entry__._rotated and the artifact reader _driver_green.
 
-The ordering contract (normative in the _rotated docstring):
-  (a) never-rowed keys first, oldest registration cohort first,
-      registry order within a cohort;
+The ordering contract (stated in the _rotated docstring):
+  (a) keys without a passing CORRECTNESS row first, in registry order;
   (b) driver greens sorted by (latest green round, registry index) —
       oldest-green-first with a deterministic registry tie-break;
   (c) the ordering is total over the registry — no key dropped.
@@ -12,7 +11,9 @@ These tests inject a synthetic green map so they are independent of
 the CORRECTNESS_r*.json artifacts on disk.
 """
 import importlib.util
+import json
 import os
+import shutil
 import sys
 
 import pytest
@@ -20,9 +21,9 @@ import pytest
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _entry_module():
+def _entry_module(directory=_HERE):
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_under_test", os.path.join(_HERE, "__spark_entry__.py"))
+        "spark_entry_under_test", os.path.join(directory, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -39,9 +40,7 @@ def test_total_over_registry(entry_mod):
     registry.load_all()
     keys = list(registry.QUERIES)
     for green in ({}, {keys[0]: 3}, {k: 5 for k in keys}):
-        out = entry_mod._rotated(registry.QUERIES, green=green or None) \
-            if green else entry_mod._rotated(registry.QUERIES,
-                                             green={keys[0]: 99})
+        out = entry_mod._rotated(registry.QUERIES, green=green)
         assert sorted(out) == sorted(keys)
         assert len(out) == len(set(out))
 
@@ -72,35 +71,21 @@ def test_failed_latest_row_rotates_to_front(entry_mod):
     assert out[0] == "y"
 
 
-def test_cohort_demotion_order(entry_mod):
-    """Within the waiting tier, pre-cohort keys precede cohort keys and
-    older cohorts precede newer ones (synthetic members injected)."""
-    mod = entry_mod
-    keys = {"old_key": None, "r5_key": None, "r13_key": None}
-    saved5, saved13 = mod._R05_NEW, mod._R13_NEW
-    try:
-        mod._R05_NEW = set(saved5) | {"r5_key"}
-        mod._R13_NEW = set(saved13) | {"r13_key"}
-        out = mod._rotated(keys, green={"__unused__": 1})
-    finally:
-        mod._R05_NEW, mod._R13_NEW = saved5, saved13
-    assert out == ["old_key", "r5_key", "r13_key"]
-
-
-def test_r13_cohort_leads_round14_window(entry_mod):
-    """Integration against the REAL artifacts: all 41 _R13_NEW keys are
-    in the first 41 slots of the round-14 ordering (the round-13
-    verdict's top priority), followed by the stalest greens."""
+def test_no_artifacts_gives_registry_order(entry_mod):
+    """With no CORRECTNESS rows (a fresh checkout) the order is the registry."""
     from engine import registry
     registry.load_all()
-    out = entry_mod._rotated(registry.QUERIES)
-    green = entry_mod._driver_green()
-    r13 = entry_mod._R13_NEW
-    never_rowed = [k for k in r13 if k not in green]
-    if not never_rowed:
-        pytest.skip("r13 cohort already has driver rows (post-round-14)")
-    head = set(out[: len(never_rowed)])
-    assert head == set(never_rowed)
-    # spare slots immediately after are the oldest greens
-    tail_rounds = [green[k] for k in out[len(never_rowed):] if k in green]
-    assert tail_rounds == sorted(tail_rounds)
+    keys = registry.QUERIES
+    assert entry_mod._rotated(keys, green={}) == list(keys)
+
+
+def test_broken_artifact_raises(tmp_path, monkeypatch):
+    """A CORRECTNESS artifact that does not parse is an error, not a
+    silent skip that would send its keys back to the front."""
+    shutil.copy(os.path.join(_HERE, "__spark_entry__.py"), tmp_path)
+    (tmp_path / "CORRECTNESS_r99.json").write_text('{"q_scan_project": {"ha')
+    # the copy puts its own directory on sys.path; undo that afterwards
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    mod = _entry_module(tmp_path)
+    with pytest.raises(json.JSONDecodeError):
+        mod._driver_green()

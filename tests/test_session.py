@@ -1,5 +1,6 @@
 """configure(): a conf the running session fixed at build time is
-skipped with one warning that names it; any other error raises."""
+skipped with one warning that names it; any other error raises.
+The default driver heap follows physical memory."""
 import pytest
 from pyspark.errors import IllegalArgumentException
 
@@ -27,3 +28,11 @@ def test_configure_raises_on_a_bad_value(spark, monkeypatch):
     with pytest.raises(IllegalArgumentException, match="INVALID_CONF_VALUE"):
         session.configure(spark)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+@pytest.mark.parametrize("gb, want", [(8, "2g"), (15, "3g"), (512, "24g")])
+def test_default_driver_memory_is_a_quarter_of_ram(monkeypatch, gb, want):
+    page = 4096
+    sizes = {"SC_PHYS_PAGES": gb * 2**30 // page, "SC_PAGE_SIZE": page}
+    monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+    assert session.default_driver_memory() == want
