@@ -35,6 +35,7 @@ session's life), and ``plan_persist``'s one generation per key.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType
 
 from .session import configure
 
@@ -100,6 +101,21 @@ def memo_drop(spark: SparkSession, *prefix) -> None:
                 _unpersist(group.pop(k))
 
 
+def with_event_time(df: DataFrame) -> DataFrame:
+    """Normalize ``ts`` to a session-tz (UTC) microsecond timestamp.
+
+    Handles both fixture generations: bigint nanoseconds (read via
+    ``nanosAsLong``) and native parquet ``timestamp[us]`` (read as
+    TIMESTAMP_NTZ). Under the engine's UTC session timezone the two
+    produce identical instants, and both match DuckDB's
+    ``epoch_ns(ts)//1000`` oracle convention. Batch reads and stream
+    sources share it."""
+    if isinstance(df.schema["ts"].dataType, LongType):
+        return df.withColumn(
+            "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS LONG))"))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load all driver tables as DataFrames and register temp views.
 
@@ -121,18 +137,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for t in TABLES:
         df = spark.read.parquet(f"{sf}/{t}.parquet")
         if t == "events":
-            # Normalize ts to a session-tz (UTC) µs timestamp. Older
-            # fixtures store bigint nanoseconds (nanosAsLong), newer
-            # ones native timestamp[us] (TIMESTAMP_NTZ); DuckDB's
-            # epoch_ns(ts)//1000 oracle convention matches both.
-            from pyspark.sql.types import LongType
-
-            if isinstance(df.schema["ts"].dataType, LongType):
-                df = df.withColumn(
-                    "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS LONG))")
-                )
-            else:
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+            df = with_event_time(df)
         dfs[t] = df
         df.createOrReplaceTempView(t)
     per_session[sf] = dfs
@@ -179,27 +184,6 @@ def plan_persist(spark: SparkSession, key: str, df: DataFrame,
     df = df.persist()
     gc[key] = df
     return df
-
-
-def plan_persist_at_scale(spark: SparkSession, key: str, df: DataFrame,
-                          src: DataFrame) -> DataFrame:
-    """plan_persist, gated on the SAME scale signal as ``spread``:
-    persist the shared subtree only when its source carries at least
-    the session's core count of partitions. At fixture scale (the
-    driver tables are one parquet row group, usually cached) a
-    recompute is one in-memory aggregate, and the persist round-trip
-    (unpersist previous generation + materialization barrier) costs
-    more than it saves — a same-session A/B measured it as a
-    0.3-0.5 s per-key LOSS on the sub-second stats keys
-    (OPTIMIZATION_r15.md batch 3). At the 100 TB design point the
-    source is thousands of partitions and every extra consumer of
-    the subtree is a full corpus pass, so the bounded frame
-    persists. The check runs at plan-build time; like spread, it is
-    structural, not data-dependent."""
-    p = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < p:
-        return df
-    return plan_persist(spark, key, df)
 
 
 def table_count(spark: SparkSession, sf_dir: str, table: str) -> int:

@@ -6,8 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window as W, functions as F
 
-from ..io import (load_tables, memo, plan_persist, plan_persist_at_scale,
-                  spread)
+from ..io import load_tables, memo, plan_persist, spread
 from ..registry import query
 from .util import (dsum, hexpoly_col, hexpoly_sql, prod128, rnd,
                    sql_dsum, sql_rnd, sum128)
@@ -650,15 +649,9 @@ def q_chi2_independence(spark, sf):
     deterministic double arithmetic over |cells| terms, quantized
     once."""
     c = load_tables(spark, sf)["customer"]
-    # the contingency frame feeds both marginals, the total, and the
-    # cell left-join (the q_mutual_info shape) — persisted AT SCALE
-    # (|seg × nation| cells are bounded), recomputed at fixture scale
-    # where the A/B measured the persist round-trip as a net loss.
-    o = plan_persist_at_scale(
-        spark, "chi2:o",
-        c.groupBy(F.col("c_mktsegment").alias("seg"),
-                  F.col("c_nationkey").alias("nat"))
-        .agg(F.count(F.lit(1)).alias("obs")), c)
+    o = (c.groupBy(F.col("c_mktsegment").alias("seg"),
+                   F.col("c_nationkey").alias("nat"))
+         .agg(F.count(F.lit(1)).alias("obs")))
     rt = o.groupBy("seg").agg(F.sum("obs").alias("r_tot"))
     ct = o.groupBy("nat").agg(F.sum("obs").alias("c_tot"))
     cells = (rt.crossJoin(F.broadcast(ct))
@@ -967,44 +960,41 @@ def q_mutual_info(spark, sf):
     zero, so only observed cells participate (no empty-cell grid).
 
     Scale: one data-sized groupBy builds the joint counts; marginals
-    and the MI/entropy folds run over |x·y| observed cells,
-    broadcast-joined.  All counts exact BIGINTs; ln over exact
+    (windows) and the MI/entropy folds run over the |x·y| observed
+    cells.  All counts exact BIGINTs; ln over exact
     rationals quantized once (the q_text_entropy libm precedent)."""
     e = load_tables(spark, sf)["events"]
-    # the joint-count cell frame feeds the marginals and the MI fold,
-    # and Catalyst's exchange reuse cannot collapse every
-    # column-pruned copy — persisted AT SCALE (|x·y| cells are
-    # bounded at any corpus size: event types × 24 hours), recomputed
-    # at fixture scale where the A/B measured the persist round-trip
-    # as a net loss (engine.io.plan_persist_at_scale).
-    o = plan_persist_at_scale(
-        spark, "mi:o",
-        e.groupBy(F.col("event_type").alias("x"),
-                  F.hour("ts").cast("int").alias("y"))
-        .agg(F.count(F.lit(1)).alias("nxy")), e)
-    mx = o.groupBy("x").agg(F.sum("nxy").alias("nx"))
-    my = o.groupBy("y").agg(F.sum("nxy").alias("ny"))
-    # the grand total folds out of the x-marginal (Σ nx ≡ Σ nxy,
-    # exact BIGINTs) instead of a third pass over the cell lineage
-    t = mx.agg(F.sum("nx").alias("n"))
-    joined = (o.join(F.broadcast(mx), "x").join(F.broadcast(my), "y")
-              .crossJoin(F.broadcast(t)))
+    o = (e.groupBy(F.col("event_type").alias("x"),
+                   F.hour("ts").cast("int").alias("y"))
+         .agg(F.count(F.lit(1)).alias("nxy")))
+    # the marginals and the grand total are windows over the cell
+    # frame, and each entropy sums its marginal once (the first cell
+    # of each x / y), so the cell aggregate has ONE consumer: without
+    # it every marginal join re-ran the events scan, since the join
+    # filters pushed into each copy defeat exchange reuse
+    wx, wy = W.partitionBy("x"), W.partitionBy("y")
+    cells = o.select(
+        # a NULL-keyed cell counts in n and its marginal's entropy but
+        # not in the MI sum, as the oracle's inner joins have it
+        F.when(F.col("x").isNotNull() & F.col("y").isNotNull(),
+               F.col("nxy")).alias("nxy"),
+        F.sum("nxy").over(wx).alias("nx"),
+        F.sum("nxy").over(wy).alias("ny"),
+        F.sum("nxy").over(W.partitionBy()).alias("n"),
+        (F.row_number().over(wx.orderBy("y")) == 1).alias("x1"),
+        (F.row_number().over(wy.orderBy("x")) == 1).alias("y1"))
     nd = F.col("n").cast("double")
-    s = joined.agg(
+    s = cells.agg(
         F.sum(F.col("nxy") / nd
               * F.log(F.col("nxy") * nd
                       / (F.col("nx").cast("double") * F.col("ny"))))
         .alias("mi"),
-        F.max("n").alias("n"))
-    hx = (mx.crossJoin(F.broadcast(t))
-          .agg((-F.sum(F.col("nx") / nd
-                       * F.log(F.col("nx") / nd))).alias("h")))
-    hy = (my.crossJoin(F.broadcast(t))
-          .agg((-F.sum(F.col("ny") / nd
-                       * F.log(F.col("ny") / nd))).alias("h")))
-    return (s.crossJoin(F.broadcast(hx.select(F.col("h").alias("h_x"))))
-            .crossJoin(F.broadcast(hy.select(F.col("h").alias("h_y"))))
-            .select(F.col("n").cast("long").alias("n"),
+        F.max("n").alias("n"),
+        (-F.sum(F.when(F.col("x1"), F.col("nx") / nd
+                       * F.log(F.col("nx") / nd)))).alias("h_x"),
+        (-F.sum(F.when(F.col("y1"), F.col("ny") / nd
+                       * F.log(F.col("ny") / nd)))).alias("h_y"))
+    return s.select(F.col("n").cast("long").alias("n"),
                     rnd(F.col("mi")).alias("mi_nats"),
                     rnd(F.col("h_x")).alias("h_x"),
                     rnd(F.col("h_y")).alias("h_y"),
@@ -1015,7 +1005,7 @@ def q_mutual_info(spark, sf):
                         / F.nullif(
                             F.sqrt(F.col("h_x") * F.col("h_y")),
                             F.lit(0.0)))
-                    .alias("nmi")))
+                    .alias("nmi"))
 
 
 # ------------------------------------------------ Spearman correlation
@@ -1485,17 +1475,12 @@ def q_kruskal_wallis(spark, sf):
                                   + F.col("t") + 1)).alias("r2"),
               sum128((prod128(F.col("t"), F.col("t")) - 1)
                      * F.col("c"), "decimal").alias("ties_g")))
-    # g (k rows) feeds the n fold and the s fold — persisted AT SCALE
-    # so the corpus lineage (cell aggregate + rank window join) runs
-    # once per invocation (recomputed at fixture scale; A/B).
-    g = plan_persist_at_scale(spark, "kw:g", g, e)
-    n = g.agg(F.sum("n_g").alias("n"), F.count(F.lit(1)).alias("k"),
-              F.sum("ties_g").cast("double").alias("ties"))
-    s = (g.crossJoin(F.broadcast(n))
-         .agg(F.max("n").alias("n"), F.max("k").alias("k"),
-              F.max("ties").alias("ties"),
+    # Σ R2_g²/n_g does not depend on N, so N, k, the tie sum and the
+    # rank-sum fold are one aggregate over the k group rows
+    s = g.agg(F.sum("n_g").alias("n"), F.count(F.lit(1)).alias("k"),
+              F.sum("ties_g").cast("double").alias("ties"),
               F.sum(F.col("r2").cast("double") * F.col("r2")
-                    / F.col("n_g")).alias("sr2")))
+                    / F.col("n_g")).alias("sr2"))
     nd = F.col("n").cast("double")
     h = 3.0 * F.col("sr2") / (nd * (nd + 1.0)) - 3.0 * (F.col("n") + 1)
     corr = 1.0 - F.col("ties") / (nd * nd * nd - nd)
@@ -1574,28 +1559,20 @@ def q_levene_test(spark, sf):
          .agg(F.count(F.lit(1)).alias("n_g"),
               F.sum("dc").alias("s_g"),
               sum128(prod128(F.col("dc"), F.col("dc"))).alias("q_g")))
-    # g (one row per group) feeds the t fold AND the s fold; at scale
-    # each extra consumer re-runs the corpus lineage (median
-    # broadcast join + moment aggregate), so the k-row frame persists
-    # — at fixture scale it recomputes (A/B: the persist round-trip
-    # costs more than one in-memory aggregate).
-    g = plan_persist_at_scale(spark, "levene:g", g, e)
-    t = g.agg(F.sum("n_g").alias("n"),
-              F.sum("s_g").cast("double").alias("tt"),
-              F.count(F.lit(1)).alias("k"))
+    # SSB = Σ s_g²/n_g − T²/N: every term is a sum over the k group
+    # rows, so one aggregate yields them all and a select forms SSB
     sg2 = F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g")
-    s = (g.crossJoin(F.broadcast(t))
-         .agg(F.max("n").alias("n"), F.max("k").alias("k"),
-              (F.sum(sg2)
-               - F.max(F.col("tt") * F.col("tt") / F.col("n")))
-              .alias("ssb"),
-              F.sum(F.col("q_g") - sg2).alias("ssw")))
+    s = g.agg(F.sum("n_g").alias("n"), F.count(F.lit(1)).alias("k"),
+              F.sum("s_g").cast("double").alias("tt"),
+              F.sum(sg2).alias("ssg2"),
+              F.sum(F.col("q_g") - sg2).alias("ssw"))
+    ssb = F.col("ssg2") - F.col("tt") * F.col("tt") / F.col("n")
     return s.select(
         F.col("n").cast("long").alias("n"),
         F.col("k").cast("long").alias("k"),
         (F.col("k") - 1).cast("long").alias("dof_between"),
         (F.col("n") - F.col("k")).cast("long").alias("dof_within"),
-        rnd((F.col("ssb") / (F.col("k") - 1))
+        rnd((ssb / (F.col("k") - 1))
             / F.nullif(F.col("ssw") / (F.col("n") - F.col("k")),
                        F.lit(0.0))).alias("w_stat"))
 
@@ -1792,21 +1769,14 @@ def q_survival_km(spark, sf):
     c = sp.groupBy("t").agg(
         F.count(F.when(F.col("ev"), 1)).alias("d"),
         F.count(F.when(~F.col("ev"), 1)).alias("cns"))
-    # |distinct gap| rows, bounded by the corpus day span — persisted
-    # AT SCALE so the orders lead-window (the only corpus-sized work)
-    # runs once per invocation (recomputed at fixture scale; A/B),
-    # and the spell total is derived from c by exact algebra (every
-    # spell lands in exactly one t bucket as either d or cns, so
-    # Σ(d+cns) = |sp|) instead of a second corpus pass.
-    c = plan_persist_at_scale(spark, "km:c", c, o0)
-    tot = c.agg(F.sum(F.col("d") + F.col("cns")).alias("n_tot"))
-    wp = W.orderBy("t").rowsBetween(W.unboundedPreceding, -1)
-    r = (c.crossJoin(F.broadcast(tot))
-         .select("t", "d", "cns",
-                 (F.col("n_tot")
-                  - F.coalesce(F.sum(F.col("d") + F.col("cns"))
-                               .over(wp), F.lit(0)))
-                 .alias("n_risk")))
+    # every spell lands in exactly one t bucket as either d or cns
+    # (so Σ(d+cns) = |sp|): the spells still at risk at t are the
+    # integer suffix sum of d+cns over the |distinct gap| rows of c,
+    # with no spell total and no second corpus pass
+    wf = W.orderBy("t").rowsBetween(W.currentRow, W.unboundedFollowing)
+    r = c.select("t", "d", "cns",
+                 F.sum(F.col("d") + F.col("cns")).over(wf)
+                 .alias("n_risk"))
     lnq = (F.when((F.col("d") > 0) & (F.col("d") < F.col("n_risk")),
                   F.floor(F.log((F.col("n_risk") - F.col("d"))
                                 / F.col("n_risk").cast("double"))

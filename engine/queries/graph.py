@@ -22,8 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import (load_tables, memo, plan_persist, plan_persist_at_scale,
-                  table_count)
+from ..io import load_tables, memo, plan_persist, table_count
 from ..registry import query
 from .util import rnd, sql_rnd
 
@@ -71,24 +70,17 @@ def q_graph_triangles(spark, sf):
              .select("l_orderkey", "l_partkey").distinct())
     b = items.select(F.col("l_orderkey").alias("o"),
                      F.col("l_partkey").alias("p2"))
-    # edges feeds THREE consumers (degree frame, orientation join,
-    # n_edges count) whose pruned copies defeat exchange reuse —
-    # persisted AT SCALE only (r16): the r15 driver flagged
-    # graph_triangles 0.89x despite the task-count win, and an
-    # interleaved ab_persist A/B confirmed the fixture-scale persist
-    # is a net LOSS (median 4.18 s persisted vs 2.76 s recomputed,
-    # min 2.93 vs 2.11 — the materialization barrier outweighs the
-    # in-memory recompute). At the 100 TB design point each extra
-    # consumer is a corpus pass, so the gate opens and the subtree
-    # persists — same structural signal as spread/plan_persist_at_scale
-    # everywhere else.
-    edges = plan_persist_at_scale(
+    # edges feeds the degree frame and the orientation join, whose
+    # pruned copies defeat exchange reuse, so it is computed once at
+    # every scale: on local[4] the recompute per consumer ran 9-10 s
+    # at sf0.1 and 45-48 s at x10, against 2.0 s and 3.2-3.4 s
+    edges = plan_persist(
         spark, "tri:edges",
         items.select(F.col("l_orderkey").alias("o"),
                      F.col("l_partkey").alias("p1"))
         .join(b, "o")
         .where(F.col("p1") < F.col("p2"))
-        .select("p1", "p2").distinct(), li)
+        .select("p1", "p2").distinct())
     deg = (edges.select(F.col("p1").alias("node"))
            .unionAll(edges.select(F.col("p2").alias("node")))
            .groupBy("node").agg(F.count(F.lit(1)).alias("d")))
@@ -100,15 +92,11 @@ def q_graph_triangles(spark, sf):
                           F.col("d").alias("d2")), "p2"))
     lo_first = (F.col("d1") < F.col("d2")) | (
         (F.col("d1") == F.col("d2")) & (F.col("p1") < F.col("p2")))
-    # plan_persist (not a bare .persist()) — the previous per-
-    # invocation persist was never unpersisted, leaking one oriented
-    # copy into executor storage per bench rep for the session's life.
-    # Gated at-scale with edges (r16, same ab_persist evidence).
-    oriented = plan_persist_at_scale(spark, "tri:oriented", e.select(
+    # the wedge self-join and the closing semi-join read it three times
+    oriented = plan_persist(spark, "tri:oriented", e.select(
         F.when(lo_first, F.col("p1")).otherwise(F.col("p2")).alias("src"),
         F.when(lo_first, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
-        F.when(lo_first, F.col("d2")).otherwise(F.col("d1")).alias("ddst"),
-    ), li)
+        F.when(lo_first, F.col("d2")).otherwise(F.col("d1")).alias("ddst")))
     # wedges pivoted at src, ordered by (deg, id) so each triangle
     # closes exactly once via the oriented (b, c) edge
     w2 = oriented.select(F.col("src"), F.col("dst").alias("dst2"),
@@ -121,12 +109,14 @@ def q_graph_triangles(spark, sf):
                               F.col("dst").alias("dst2"))
     n_tri = wedges.join(closing, ["dst", "dst2"], "left_semi") \
         .agg(F.count(F.lit(1)).alias("n_triangles"))
+    # every edge is counted once from each endpoint, so n_edges folds
+    # out of the degree aggregate instead of another pass over edges
     stats = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
+        F.expr("sum(d) div 2").alias("n_edges"),
         (F.sum(F.col("d") * (F.col("d") - 1)) / 2).cast("long")
         .alias("n_wedges"))
-    n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
-    out = (n_tri.crossJoin(n_edges).crossJoin(stats).select(
+    out = (n_tri.crossJoin(stats).select(
         "n_nodes", "n_edges", "n_wedges", "n_triangles",
         rnd(3.0 * F.col("n_triangles") / F.col("n_wedges"), 6)
         .alias("clustering")))

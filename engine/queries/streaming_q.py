@@ -28,10 +28,10 @@ import tempfile
 
 from pyspark.sql import Window as W, functions as F
 
-from ..io import load_tables, memo
+from ..io import load_tables, memo, with_event_time
 from ..registry import ORACLE as _ORACLE, query
 from ..session import configure
-from ..streaming import _with_event_time, event_stream_schema
+from ..streaming import event_stream_schema
 from .events import CDC_LOG_SQL, SESSION_CAPPED_ORACLE
 from .analytics_extra import AB_WELCH_ORACLE, BENFORD_ORACLE
 from .incremental import GROUP_TOPK_ORACLE
@@ -142,7 +142,7 @@ def _run_stream(spark, sf: str, kind: str, build, one_batch: bool = False,
             reader = reader.option("maxFilesPerTrigger", 4)
         stream = reader.parquet(d)
         if table is None:
-            stream = _with_event_time(stream)
+            stream = with_event_time(stream)
         df, mode = build(stream)
         q = (df.writeStream.outputMode(mode)
              .format("memory").queryName(name).start())
@@ -529,9 +529,9 @@ def q_stream_stream_left_join(spark, sf):
             os.symlink(
                 os.path.abspath(f"{sf.rstrip('/')}/events.parquet"), link)
 
-        raw = _with_event_time(spark.read.parquet(link))
+        raw = with_event_time(spark.read.parquet(link))
         hi = raw.agg(F.max("ts")).collect()[0][0]
-        events = _with_event_time(
+        events = with_event_time(
             spark.readStream.schema(event_stream_schema(spark, src))
             .parquet(src))
         q = (attribution_left_join(events)
@@ -789,7 +789,7 @@ def q_stream_sink_idempotent(spark, sf):
 
         for attempt in (1, 2):           # run, then restart-replay
             committed.clear()
-            events = _with_event_time(
+            events = with_event_time(
                 spark.readStream.schema(
                     event_stream_schema(spark, src)).parquet(src))
             q = (events.writeStream.foreachBatch(commit_batch)

@@ -15,22 +15,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType
 
+from .io import with_event_time
 from .session import configure
-
-
-def _with_event_time(df: DataFrame) -> DataFrame:
-    """Normalize ``ts`` to a session-tz (UTC) microsecond timestamp.
-
-    Handles both fixture generations: bigint nanoseconds (read via
-    ``nanosAsLong``) and native parquet ``timestamp[us]`` (read as
-    TIMESTAMP_NTZ). Under the engine's UTC session timezone the two
-    produce identical instants."""
-    if isinstance(df.schema["ts"].dataType, LongType):
-        return df.withColumn(
-            "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS LONG))"))
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def event_stream_schema(spark: SparkSession, src_dir: str):
@@ -46,7 +33,7 @@ def read_event_stream(spark: SparkSession, src_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 4)
         .parquet(src_dir)
     )
-    return _with_event_time(raw)
+    return with_event_time(raw)
 
 
 def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -206,7 +193,7 @@ def run_replay(
     src = os.path.join(workdir, "stream_src")
     os.makedirs(src, exist_ok=True)
 
-    raw = _with_event_time(
+    raw = with_event_time(
         spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet"))
     # in-order prefix: everything except the last hour of data, sorted
     import datetime
@@ -237,7 +224,7 @@ def run_replay(
 
     streamed = spark.sql(f"SELECT * FROM {query_name}")
     batch = (
-        _with_event_time(ontime)
+        with_event_time(ontime)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
         .select(F.unix_micros("w.start").alias("ws_us"), "event_type",

@@ -12,8 +12,16 @@ made to session-level memoization:
    re-read must never pay the pyarrow sort + 12-slice write again
    (round-14 ADVICE). The pin primes the memo, then re-invokes the
    key with the stager monkeypatched to raise.
+
+Also pinned here: plan_persist's one-generation-per-key contract, and
+the shape of the stats folds that derive their totals instead of
+persisting a shared frame (no crossJoin with a 1-row total).
 """
+import pytest
+
 from engine.registry import QUERIES, load_all
+
+from test_plans import final_plan
 
 load_all()
 
@@ -48,41 +56,33 @@ def test_stream_session_capped_staging_is_lazy(spark, monkeypatch):
     assert again == first
 
 
-def test_plan_persist_at_scale_gates_on_source_partitions(spark):
-    """Round-15 batch 3: plan_persist_at_scale persists a shared
-    subtree ONLY when its source carries at least the session's core
-    count of partitions — at fixture scale the recompute is one
-    in-memory aggregate and the persist round-trip was A/B-measured
-    as a net loss (OPTIMIZATION_r15.md). The gate is structural
-    (plan-build time), exactly like engine.io.spread's."""
-    import pytest as _pytest
+def test_plan_persist_unpersists_the_previous_generation(spark):
+    """plan_persist holds one generation per key: it persists the
+    frame it returns, and a second call with the same key unpersists
+    the first one."""
     from pyspark import StorageLevel
 
-    from engine.io import plan_persist_at_scale, session_cache
+    from engine.io import plan_persist, session_cache
 
-    p = spark.sparkContext.defaultParallelism
-    if p < 2:
-        # r15 ADVICE: on local[1] a coalesce(1) source has exactly
-        # defaultParallelism partitions, so the fixture-scale arm
-        # cannot be constructed (1 is not < 1) and the gate always
-        # persists — the test's premise needs at least 2 cores.
-        _pytest.skip("plan_persist_at_scale gate needs defaultParallelism >= 2")
-    small_src = spark.range(100).coalesce(1)
-    big_src = spark.range(1000).repartition(p)
-    df = spark.range(10)
-
-    # fixture-scale source: returned UNCHANGED, nothing persisted
-    out = plan_persist_at_scale(spark, "t15:gate", df, small_src)
-    assert out is df
-    assert out.storageLevel == StorageLevel.NONE
-
-    # at-scale source: persisted, and a second call unpersists the
-    # previous generation (the plan_persist GC contract)
-    out1 = plan_persist_at_scale(spark, "t15:gate", df, big_src)
+    out1 = plan_persist(spark, "t15:gen", spark.range(10))
     assert out1.storageLevel != StorageLevel.NONE
-    out2 = plan_persist_at_scale(spark, "t15:gate",
-                                 spark.range(11), big_src)
+    out2 = plan_persist(spark, "t15:gen", spark.range(11))
     assert out2.storageLevel != StorageLevel.NONE
     assert out1.storageLevel == StorageLevel.NONE  # GC'd generation
     gc = session_cache(spark, "_engine_plan_persist_gc")
-    gc.pop("t15:gate").unpersist()  # leave the session clean
+    gc.pop("t15:gen").unpersist()  # leave the session clean
+
+
+@pytest.mark.parametrize("key, n_bnlj", [
+    ("q_kruskal_wallis", 0),
+    ("q_levene_test", 0),
+    # the horizon crossJoin onto the orders lead window
+    ("q_survival_km", 1),
+])
+def test_stats_folds_need_no_total_crossjoin(spark, key, n_bnlj):
+    """The k-row group folds of Kruskal-Wallis and Levene, and the
+    Kaplan-Meier risk set, come from one aggregate (or one suffix
+    window) over their shared frame, never from a crossJoin of that
+    frame with a 1-row total of itself."""
+    plan = final_plan(spark, key, "/root/testdata/sf0.01")
+    assert plan.count("BroadcastNestedLoopJoin") == n_bnlj, plan

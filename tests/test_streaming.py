@@ -117,12 +117,12 @@ def test_stream_stream_left_outer_join(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from engine.streaming import (_with_event_time, attribution_left_join,
-                                  event_stream_schema)
+    from engine.io import with_event_time
+    from engine.streaming import attribution_left_join, event_stream_schema
 
     with tempfile.TemporaryDirectory() as wd:
         src = f"{wd}/src"
-        raw = _with_event_time(
+        raw = with_event_time(
             spark.read.parquet(f"{sf_dir}/events.parquet"))
         raw.repartition(4).write.mode("overwrite").parquet(src)
 
@@ -130,7 +130,7 @@ def test_stream_stream_left_outer_join(spark, sf_dir):
         # a multi-batch replay of unordered part-files would drop
         # early-timestamped views behind the advancing watermark —
         # legitimate streaming semantics, but not the batch oracle
-        events = _with_event_time(
+        events = with_event_time(
             spark.readStream.schema(
                 event_stream_schema(spark, src)).parquet(src))
         q = (
@@ -278,19 +278,20 @@ def test_stream_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     and an idle restart appends nothing."""
     from pyspark.sql import functions as F
 
-    from engine.streaming import _with_event_time, event_stream_schema
+    from engine.io import with_event_time
+    from engine.streaming import event_stream_schema
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    raw = _with_event_time(
+    raw = with_event_time(
         spark.read.parquet(f"{sf_dir}/events.parquet")).limit(400)
     a = raw.filter(F.col("event_id") % 2 == 0)
     b = raw.filter(F.col("event_id") % 2 == 1)
     a.coalesce(1).write.mode("overwrite").parquet(src)
 
     def run_once():
-        events = _with_event_time(
+        events = with_event_time(
             spark.readStream.schema(
                 event_stream_schema(spark, src)).parquet(src))
         q = (events.select("event_id", "user_id", "value")
@@ -449,7 +450,8 @@ def test_capped_sessions_stateful_multichunk_group(spark):
     import pyarrow.parquet as pq
 
     from engine.queries.events import _SESS_CAP_US, _SESS_GAP_US
-    from engine.streaming import _with_event_time, capped_sessions_stateful
+    from engine.io import with_event_time
+    from engine.streaming import capped_sessions_stateful
 
     # 40 events: 3h spacing (crosses the 24h cap twice) plus one 9h
     # gap at index 20 (crosses the 8h inactivity split) — both
@@ -486,7 +488,7 @@ def test_capped_sessions_stateful_multichunk_group(spark):
             src = f"{wd}/src"
             os.makedirs(src)
             pq.write_table(tbl, f"{src}/part-0.parquet")
-            events = _with_event_time(spark.readStream.schema(
+            events = with_event_time(spark.readStream.schema(
                 spark.read.parquet(src).schema).parquet(src))
             q = (capped_sessions_stateful(events)
                  .writeStream.outputMode("update")

@@ -19,13 +19,11 @@ jobs/stages/tasks of its last run.
   --ab NAME  alternate the identity and the real engine.io helper NAME,
              run by run, after one untimed pass per arm. The helper is
              patched in engine.io and in every engine module that
-             imported it. plan_persist_at_scale returns before it calls
-             plan_persist when its gate is closed (fixture scale), so
-             its call sites differ between arms only at scale.
+             imported it.
 
 Examples:
   python tools/probe.py -n 5 --cold q_pack_schedule_bpe
-  python tools/probe.py -n 4 --ab plan_persist q_mutual_info
+  python tools/probe.py -n 4 --ab plan_persist q_decile_lift
   python tools/probe.py --conf spark.sql.shuffle.partitions=4 stitch_user_fn_128cube
   SPARK_GRAFT_SF_DIR=/tmp/engine_scale_x10 python tools/probe.py q_corpus_curate
 """
