@@ -2,8 +2,10 @@
 
 ``load_tables`` reads the ten driver parquet tables, repairs
 ``events.ts`` (TIMESTAMP(NANOS) → microsecond timestamp, SURVEY.md
-§1.4), registers temp views, and memoizes per (session, sf_dir) so
-the ~70 query callables don't re-read parquet footers.
+§1.4), registers temp views, and memoizes per (session, sf_dir).
+Each table's schema comes from ``parquet_schema``, which reads its
+parquet footer on the driver, so registering the tables launches no
+Spark job (Spark's own schema inference runs one job per table).
 
 ``memo(spark, sf, key, build)`` is the one store for everything an
 operator derives once and reuses within a session: fitted
@@ -34,8 +36,10 @@ session's life), and ``plan_persist``'s one generation per key.
 """
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from .session import configure
 
@@ -116,12 +120,54 @@ def with_event_time(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read from one
+    parquet footer on the driver instead of in a Spark job.
+
+    ``path`` is a parquet file or a directory of them (a Spark-written
+    table); for a directory the footer is that of its first data file
+    by name, skipping ``_``/``.`` names as Spark's inference does
+    (summary files are not read; Spark writes none by default). The
+    footer goes through Spark's own converter,
+    ``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` built from the session's SQLConf,
+    and every field is made nullable as a file relation's schema is,
+    so ``nanosAsLong`` TIMESTAMP(NANOS), INT96 and a schema stored
+    under Spark's row-metadata key come out exactly as inferred. A
+    missing or unreadable footer raises."""
+    jvm, jss = spark._jvm, spark._jsparkSession
+    conf = jss.sessionState().newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    status = fs.getFileStatus(root)
+    if status.isDirectory():
+        files = {st.getPath().getName(): st
+                 for st in fs.listStatus(root) if st.isFile()}
+        first = min((name for name in files
+                     if not name.startswith(("_", "."))), default=None)
+        if first is None:
+            raise FileNotFoundError(f"no parquet data file in {path}")
+        status = files[first]
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    parquet = jvm.org.apache.parquet
+    footer = pq.ParquetFooterReader.readFooter(
+        parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
+        parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        parquet.hadoop.Footer(status.getPath(), footer),
+        pq.ParquetToSparkSchemaConverter(jss.sessionState().conf()))
+    return StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load all driver tables as DataFrames and register temp views.
 
-    Memoized per (session, sf_dir); if this session last registered
-    views for a *different* sf_dir, the views are re-pointed so
-    SQL-text queries always read the requested scale.
+    Each table is read with the schema ``parquet_schema`` takes from
+    its footer on the driver, so no Spark job runs here. Memoized per
+    (session, sf_dir), so the query callables share one set of frames;
+    if this session last registered views for a *different* sf_dir,
+    the views are re-pointed so SQL-text queries always read the
+    requested scale.
     """
     sf = sf_dir.rstrip("/")
     per_session = session_cache(spark, "_engine_table_cache")
@@ -135,7 +181,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     configure(spark)
     dfs: dict[str, DataFrame] = {}
     for t in TABLES:
-        df = spark.read.parquet(f"{sf}/{t}.parquet")
+        path = f"{sf}/{t}.parquet"
+        df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
         if t == "events":
             df = with_event_time(df)
         dfs[t] = df

@@ -28,7 +28,7 @@ import tempfile
 
 from pyspark.sql import Window as W, functions as F
 
-from ..io import load_tables, memo, with_event_time
+from ..io import load_tables, memo, parquet_schema, with_event_time
 from ..registry import ORACLE as _ORACLE, query
 from ..session import configure
 from ..streaming import event_stream_schema
@@ -1622,7 +1622,7 @@ def checkpoint_resume_meta(spark, sf):
 
         def start():
             ev = (spark.readStream
-                  .schema(spark.read.parquet(stage).schema)
+                  .schema(parquet_schema(spark, stage))
                   .option("maxFilesPerTrigger", 1).parquet(stage))
             agg = (ev.groupBy("event_type")
                    .agg(F.count(F.lit(1)).alias("n"),
@@ -1846,7 +1846,7 @@ def _late_data_run(spark, sf):
                         mt = (i + 1) * 1_000_000
                         os.utime(os.path.join(d, f), (mt, mt))
             open(os.path.join(base, "_STAGED"), "w").close()
-        schema = spark.read.parquet(os.path.join(base, "0_head_a")).schema
+        schema = parquet_schema(spark, os.path.join(base, "0_head_a"))
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1)
                   .option("recursiveFileLookup", "true")

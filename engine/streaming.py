@@ -16,14 +16,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .io import with_event_time
+from .io import parquet_schema, with_event_time
 from .session import configure
 
 
 def event_stream_schema(spark: SparkSession, src_dir: str):
-    """File-stream sources need an explicit schema; infer it from a
-    batch read of the same directory (footer-only, no data scan)."""
-    return spark.read.parquet(src_dir).schema
+    """File-stream sources need an explicit schema; take it from the
+    parquet footer of the directory's first data file, on the driver
+    (``engine.io.parquet_schema``: what a batch read would infer, with
+    no Spark job)."""
+    return parquet_schema(spark, src_dir)
 
 
 def read_event_stream(spark: SparkSession, src_dir: str) -> DataFrame:

@@ -1,10 +1,13 @@
-"""End-to-end smoke of tools/probe.py: a cold A/B of spread on one key,
-in its own session at sf0.01."""
+"""tools/probe.py: an end-to-end smoke (a cold A/B of spread on one
+key, in its own session at sf0.01) and the untimed pass of ``probe``."""
+import importlib.util
 import json
 import os
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -26,3 +29,45 @@ def test_probe_cold_ab_reports_both_arms(tmp_path):
         assert arm["min"] == arm["median"] == arm["runs"][0] > 0
         assert arm["jobs"] >= 1
         assert arm["stages"] >= arm["jobs"] and arm["tasks"] >= arm["stages"]
+
+
+def _probe_module():
+    spec = importlib.util.spec_from_file_location(
+        "probe_tool", ROOT / "tools" / "probe.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize("cold", [False, True])
+@pytest.mark.parametrize("n_arms", [1, 2])
+def test_probe_runs_one_uncounted_untimed_pass_per_arm(
+        spark, monkeypatch, cold, n_arms):
+    """Every mode, --cold and a single arm included, runs one untimed
+    pass per arm before the timed runs, so no timed run is a key's
+    first, and the jobs of that pass stay out of the job shape."""
+    probe = _probe_module()
+    sc = spark.sparkContext
+    events = []
+    monkeypatch.setattr(probe.io, "memo_drop",
+                        lambda s: events.append("drop"))
+
+    def run():
+        events.append("run")
+        if events.count("run") <= n_arms:  # the untimed pass: 2 jobs
+            sc.parallelize([1], 1).count()
+        sc.parallelize([1], 1).count()
+
+    arms = {f"arm{a}": (lambda a=a: events.append(f"set{a}"))
+            for a in range(n_arms)}
+    # job groups are named by key: one key per case keeps them apart
+    out = probe.probe(spark, f"k{n_arms}{cold}", run, 2, cold, arms)
+    drop = ["drop"] if cold else []
+    untimed = [e for a in range(n_arms) for e in (f"set{a}", "run")]
+    timed = [e for _ in range(2) for a in range(n_arms)
+             for e in (f"set{a}", *drop, "run")]
+    assert events == untimed + timed
+    assert set(out) == set(arms)
+    for arm in out.values():
+        assert len(arm["runs"]) == 2
+        assert (arm["jobs"], arm["stages"], arm["tasks"]) == (1, 1, 1)

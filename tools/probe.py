@@ -6,20 +6,21 @@ Usage: python tools/probe.py [-n N] [--cold] [--conf k=v]...
 The session, warm-up, full-compute pass and timing helper are
 bench.py's, at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 Keys default to bench.HEADLINE; the two 128³ block entries of the bench
-(stitch_block_path_128cube, stitch_user_fn_128cube) are keys too. Each
-key prints one JSON line: its run times, min and median, and the
-jobs/stages/tasks of its last run.
+(stitch_block_path_128cube, stitch_user_fn_128cube) are keys too. Every
+key first runs one untimed pass per arm (code generation, first
+broadcasts), so no timed run is a key's first; that pass's jobs are
+not counted. Each key prints one JSON line: its run times, min and
+median, and the jobs/stages/tasks of its last run.
 
   -n N       runs per key (per arm with --ab); default 3
   --cold     drop the session memo (engine.io.memo_drop) before each
-             run, untimed, so every run pays the memo fill; the cached
-             fact tables stay cached
+             timed run, untimed, so every timed run pays the memo fill;
+             the cached fact tables stay cached
   --conf k=v set RUNTIME_CONFS[k] before the session starts; an empty
              value removes the conf, so Spark's default applies
   --ab NAME  alternate the identity and the real engine.io helper NAME,
-             run by run, after one untimed pass per arm. The helper is
-             patched in engine.io and in every engine module that
-             imported it.
+             run by run. The helper is patched in engine.io and in
+             every engine module that imported it.
 
 Examples:
   python tools/probe.py -n 5 --cold q_pack_schedule_bpe
@@ -53,6 +54,7 @@ IDENTITY = {
 
 def job_shape(sc, group: str) -> dict:
     """Jobs, stages and tasks that ran under the job group ``group``."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the bus
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     stages = tasks = 0
@@ -81,15 +83,16 @@ def patcher(name: str, fn):
 
 
 def probe(spark, key: str, run, n: int, cold: bool, arms: dict) -> dict:
-    """Time ``run`` n times per arm, arms alternating run by run, and
-    summarize each arm."""
+    """Time ``run`` n times per arm, arms alternating run by run, after
+    one untimed pass per arm under its own job group, and summarize
+    each arm."""
     sc = spark.sparkContext
     runs = {arm: [] for arm in arms}
     group = {}
-    if len(arms) > 1:
-        for set_arm in arms.values():  # codegen warm-up for every arm
-            set_arm()
-            run()
+    for arm, set_arm in arms.items():
+        set_arm()
+        sc.setJobGroup(f"probe:{key}:{arm}:untimed", key)
+        run()
     for i in range(n):
         for arm, set_arm in arms.items():
             set_arm()
