@@ -124,32 +124,49 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema ``spark.read.parquet(path)`` infers, read from one
     parquet footer on the driver instead of in a Spark job.
 
-    ``path`` is a parquet file or a directory of them (a Spark-written
-    table); for a directory the footer is that of its first data file
-    by name, skipping ``_``/``.`` names as Spark's inference does
-    (summary files are not read; Spark writes none by default). The
-    footer goes through Spark's own converter,
-    ``ParquetFileFormat.readSchemaFromFooter`` with a
-    ``ParquetToSparkSchemaConverter`` built from the session's SQLConf,
-    and every field is made nullable as a file relation's schema is,
-    so ``nanosAsLong`` TIMESTAMP(NANOS), INT96 and a schema stored
-    under Spark's row-metadata key come out exactly as inferred. A
-    missing or unreadable footer raises."""
+    ``path`` (not globbed) is a parquet file or a directory of them,
+    such as a Spark-written table. Its files come from Spark's own
+    driver-side listing, an ``InMemoryFileIndex``, so hidden names,
+    empty files and the files a directory read covers are as a read
+    sees them. Of those, the footer read is the one Spark's inference
+    reads: ``_common_metadata``, else ``_metadata``, else the first
+    data file by full path. The footer goes through Spark's own
+    converter, ``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` built from the session's
+    SQLConf, and every field is made nullable as a file relation's
+    schema is, so ``nanosAsLong`` TIMESTAMP(NANOS), INT96 and a schema
+    stored under Spark's row-metadata key come out exactly as
+    inferred.
+
+    Raises where a footer cannot give the inferred schema: no file to
+    read (where inference fails too), an unreadable footer, partition
+    directories (``k=v``; their columns are not in a footer) or
+    ``mergeSchema`` on (inference then merges every footer)."""
     jvm, jss = spark._jvm, spark._jsparkSession
-    conf = jss.sessionState().newHadoopConf()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
-    status = fs.getFileStatus(root)
-    if status.isDirectory():
-        files = {st.getPath().getName(): st
-                 for st in fs.listStatus(root) if st.isFile()}
-        first = min((name for name in files
-                     if not name.startswith(("_", "."))), default=None)
-        if first is None:
-            raise FileNotFoundError(f"no parquet data file in {path}")
-        status = files[first]
-    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    ds = jvm.org.apache.spark.sql.execution.datasources
+    index_cls = ds.InMemoryFileIndex
+    index = index_cls(
+        jss, jvm.PythonUtils.toSeq([jvm.org.apache.hadoop.fs.Path(path)]),
+        jvm.PythonUtils.toScalaMap({}), jvm.scala.Option.empty(),
+        # the constructor's Scala defaults: no status cache, no
+        # user partition spec, no timing
+        *(getattr(index_cls, f"$lessinit$greater$default${i}")()
+          for i in (5, 6, 7)))
+    if (index.partitionSchema().nonEmpty()
+            or jss.sessionState().conf().isParquetSchemaMergingEnabled()):
+        raise ValueError(f"{path}: a partitioned or schema-merged parquet "
+                         "read has no single-footer schema")
+    files = {st.getPath().toString(): st for st in
+             jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+                 index.allFiles())}
+    if not files:
+        raise FileNotFoundError(f"no parquet file to read under {path}")
+    rank = {"_common_metadata": 0, "_metadata": 1}  # data files: 2
+    status = files[min(files, key=lambda p: (
+        rank.get(p.rsplit("/", 1)[-1], 2), p))]
+    pq = ds.parquet
     parquet = jvm.org.apache.parquet
+    conf = jss.sessionState().newHadoopConf()
     footer = pq.ParquetFooterReader.readFooter(
         parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
         parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)

@@ -31,7 +31,6 @@ from pyspark.sql import Window as W, functions as F
 from ..io import load_tables, memo, parquet_schema, with_event_time
 from ..registry import ORACLE as _ORACLE, query
 from ..session import configure
-from ..streaming import event_stream_schema
 from .events import CDC_LOG_SQL, SESSION_CAPPED_ORACLE
 from .analytics_extra import AB_WELCH_ORACLE, BENFORD_ORACLE
 from .incremental import GROUP_TOPK_ORACLE
@@ -40,25 +39,39 @@ from .util import dsum, rnd, sql_dsum, sql_rnd
 _US_H = 3_600_000_000  # one hour in microseconds
 
 
+def _link_table(sf: str, table: str, src: str) -> None:
+    """Symlink one fixture table's parquet into the directory ``src``:
+    the file itself, or each data file of a Spark-written table
+    directory (the x10 fixture). A file stream source, like a batch
+    read, lists ``src`` one level deep, so a link to a table
+    directory would stream no rows."""
+    path = os.path.abspath(f"{sf.rstrip('/')}/{table}.parquet")
+    links = {f"{table}.parquet": path}
+    if os.path.isdir(path):
+        links = {f"{table}-{f}": os.path.join(path, f)
+                 for f in sorted(os.listdir(path))
+                 if not f.startswith(("_", "."))}
+    for name, target in links.items():
+        link = os.path.join(src, name)
+        # lexists, not exists: a dangling symlink (fixture dir recreated
+        # under the same path) must be replaced, not trip FileExistsError
+        if os.path.lexists(link) and not os.path.exists(link):
+            os.unlink(link)
+        if not os.path.lexists(link):
+            os.symlink(target, link)
+
+
 def _stage_source(sf: str, table: str = "events") -> str:
-    """Per-process staging directory holding a symlink to one
-    fixture table's parquet (the file stream source lists a
-    DIRECTORY; no data copy). Two engine processes on the same sf
-    must not race on each other's staged files, hence the pid
-    suffix."""
+    """Per-process staging directory holding symlinks to one fixture
+    table's parquet (the file stream source lists a DIRECTORY; no
+    data copy). Two engine processes on the same sf must not race on
+    each other's staged files, hence the pid suffix."""
     digest = hashlib.md5(
         f"{os.path.abspath(sf)}|{table}".encode()).hexdigest()[:8]
     src = os.path.join(
         tempfile.gettempdir(), f"engine_stream_src_{digest}_{os.getpid()}")
     os.makedirs(src, exist_ok=True)
-    link = os.path.join(src, f"{table}.parquet")
-    # lexists, not exists: a dangling symlink (fixture dir recreated
-    # under the same path) must be replaced, not trip FileExistsError
-    if os.path.lexists(link) and not os.path.exists(link):
-        os.unlink(link)
-    if not os.path.lexists(link):
-        os.symlink(
-            os.path.abspath(f"{sf.rstrip('/')}/{table}.parquet"), link)
+    _link_table(sf, table, src)
     return src
 
 
@@ -137,7 +150,7 @@ def _run_stream(spark, sf: str, kind: str, build, one_batch: bool = False,
         name = f"stream_{kind}_{digest}"
         d = src() if callable(src) else src
         d = d or _stage_source(sf, table or "events")
-        reader = spark.readStream.schema(event_stream_schema(spark, d))
+        reader = spark.readStream.schema(parquet_schema(spark, d))
         if not one_batch:
             reader = reader.option("maxFilesPerTrigger", 4)
         stream = reader.parquet(d)
@@ -522,17 +535,12 @@ def q_stream_stream_left_join(spark, sf):
             tempfile.gettempdir(),
             f"engine_stream_ssl_{digest}_{os.getpid()}")
         os.makedirs(src, exist_ok=True)
-        link = os.path.join(src, "events.parquet")
-        if os.path.lexists(link) and not os.path.exists(link):
-            os.unlink(link)
-        if not os.path.lexists(link):
-            os.symlink(
-                os.path.abspath(f"{sf.rstrip('/')}/events.parquet"), link)
+        _link_table(sf, "events", src)
 
-        raw = with_event_time(spark.read.parquet(link))
+        raw = load_tables(spark, sf)["events"]
         hi = raw.agg(F.max("ts")).collect()[0][0]
         events = with_event_time(
-            spark.readStream.schema(event_stream_schema(spark, src))
+            spark.readStream.schema(parquet_schema(spark, src))
             .parquet(src))
         q = (attribution_left_join(events)
              .writeStream.outputMode("append")
@@ -791,7 +799,7 @@ def q_stream_sink_idempotent(spark, sf):
             committed.clear()
             events = with_event_time(
                 spark.readStream.schema(
-                    event_stream_schema(spark, src)).parquet(src))
+                    parquet_schema(spark, src)).parquet(src))
             q = (events.writeStream.foreachBatch(commit_batch)
                  .outputMode("append").start())
             q.processAllAvailable()

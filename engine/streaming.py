@@ -20,18 +20,13 @@ from .io import parquet_schema, with_event_time
 from .session import configure
 
 
-def event_stream_schema(spark: SparkSession, src_dir: str):
-    """File-stream sources need an explicit schema; take it from the
-    parquet footer of the directory's first data file, on the driver
-    (``engine.io.parquet_schema``: what a batch read would infer, with
-    no Spark job)."""
-    return parquet_schema(spark, src_dir)
-
-
 def read_event_stream(spark: SparkSession, src_dir: str) -> DataFrame:
+    """A file stream over ``src_dir``'s events. A file stream source
+    needs an explicit schema; ``parquet_schema`` reads it from a
+    footer on the driver, with no Spark job."""
     configure(spark)
     raw = (
-        spark.readStream.schema(event_stream_schema(spark, src_dir))
+        spark.readStream.schema(parquet_schema(spark, src_dir))
         .option("maxFilesPerTrigger", 4)
         .parquet(src_dir)
     )

@@ -117,8 +117,8 @@ def test_stream_stream_left_outer_join(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from engine.io import with_event_time
-    from engine.streaming import attribution_left_join, event_stream_schema
+    from engine.io import parquet_schema, with_event_time
+    from engine.streaming import attribution_left_join
 
     with tempfile.TemporaryDirectory() as wd:
         src = f"{wd}/src"
@@ -132,7 +132,7 @@ def test_stream_stream_left_outer_join(spark, sf_dir):
         # legitimate streaming semantics, but not the batch oracle
         events = with_event_time(
             spark.readStream.schema(
-                event_stream_schema(spark, src)).parquet(src))
+                parquet_schema(spark, src)).parquet(src))
         q = (
             attribution_left_join(events)
             .writeStream.outputMode("append")
@@ -278,8 +278,7 @@ def test_stream_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     and an idle restart appends nothing."""
     from pyspark.sql import functions as F
 
-    from engine.io import with_event_time
-    from engine.streaming import event_stream_schema
+    from engine.io import parquet_schema, with_event_time
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -293,7 +292,7 @@ def test_stream_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     def run_once():
         events = with_event_time(
             spark.readStream.schema(
-                event_stream_schema(spark, src)).parquet(src))
+                parquet_schema(spark, src)).parquet(src))
         q = (events.select("event_id", "user_id", "value")
              .writeStream.format("parquet")
              .option("path", out)
