@@ -156,9 +156,9 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
             or jss.sessionState().conf().isParquetSchemaMergingEnabled()):
         raise ValueError(f"{path}: a partitioned or schema-merged parquet "
                          "read has no single-footer schema")
+    listed = index.allFiles()  # indexed: a java view iterates slowly
     files = {st.getPath().toString(): st for st in
-             jvm.scala.jdk.javaapi.CollectionConverters.asJava(
-                 index.allFiles())}
+             map(listed.apply, range(listed.length()))}
     if not files:
         raise FileNotFoundError(f"no parquet file to read under {path}")
     rank = {"_common_metadata": 0, "_metadata": 1}  # data files: 2
